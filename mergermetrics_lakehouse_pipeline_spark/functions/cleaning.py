@@ -153,19 +153,3 @@ def dedupe_by_keys(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def add_lineage(df: DataFrame, *, from_files: bool = True) -> DataFrame:
-    """Bronze lineage columns: ingest timestamp + source file name/size.
-
-    Parity: ``_metadata.file_name``/``file_size`` + ``current_timestamp()``
-    (1_customer_data_processing.py:36-37; README.md:111-115). ``_metadata``
-    only exists for file-based sources; pass ``from_files=False`` to no-op
-    gracefully on non-file DataFrames (SURVEY §7 risk list).
-    """
-    out = df.withColumn("read_timestamp", F.current_timestamp())
-    if from_files:
-        out = out.withColumn("file_name", F.col("_metadata.file_name")).withColumn(
-            "file_size", F.col("_metadata.file_size")
-        )
-    return out

@@ -55,10 +55,6 @@ def bpeish_token_count(col: Column | str) -> Column:
     return F.regexp_count(_col(col), F.lit(BPEISH_PATTERN))
 
 
-def char_count(col: Column | str) -> Column:
-    return F.length(_col(col))
-
-
 def punct_ratio(col: Column | str) -> Column:
     """Punctuation chars / total chars (0 for empty text)."""
     c = _col(col)

@@ -85,10 +85,6 @@ def iso_date(col: F.Column | str, alias: str) -> F.Column:
     return F.date_format(c, "yyyy-MM-dd").alias(alias)
 
 
-def sql_iso_date(expr: str, alias: str) -> str:
-    return f"strftime(CAST({expr} AS DATE), '%Y-%m-%d') AS {alias}"
-
-
 def dsum(col: F.Column | str, alias: str, scale: int = 2) -> F.Column:
     """Exact decimal SUM exposed as double (order-insensitive determinism)."""
     c = F.col(col) if isinstance(col, str) else col

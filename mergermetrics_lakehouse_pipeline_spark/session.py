@@ -114,20 +114,3 @@ def ensure_medallion_schemas(spark: SparkSession) -> None:
     for db in (BRONZE, SILVER, GOLD):
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read driver testdata parquet tables; returns dict name -> DataFrame."""
-    if not names:
-        names = (
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-            "events",
-            "documents",
-            "embeddings",
-        )
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

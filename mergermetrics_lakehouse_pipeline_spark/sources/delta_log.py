@@ -2738,7 +2738,9 @@ def _infer_pa_type(values: list):
     keys across ALL rows (``pa.Table.from_pylist`` alone infers from the
     first row, silently dropping the other action columns). int+float
     mixes promote to float64; bool checks precede int (bool is an int
-    subclass)."""
+    subclass); any other mix (a foreign log typing one field
+    differently across commits) promotes to string, and
+    ``_fit_pa_value`` renders the non-string values as JSON text."""
     import pyarrow as pa
 
     if all(isinstance(v, dict) for v in values):
@@ -2759,11 +2761,23 @@ def _infer_pa_type(values: list):
         return pa.int64()
     if all(isinstance(v, (int, float)) for v in values):
         return pa.float64()
-    if all(isinstance(v, str) for v in values):
-        return pa.string()
-    raise DeltaProtocolError(
-        f"cannot serialize mixed-type action values {values[:3]!r}"
-    )
+    return pa.string()
+
+
+def _fit_pa_value(v: Any, pa_type) -> Any:
+    """``v`` reshaped to ``pa_type``: a value under a field that
+    ``_infer_pa_type`` promoted to string becomes its JSON text."""
+    import pyarrow as pa
+
+    if v is None:
+        return None
+    if pa.types.is_string(pa_type):
+        return v if isinstance(v, str) else json.dumps(v)
+    if pa.types.is_struct(pa_type):
+        return {f.name: _fit_pa_value(v.get(f.name), f.type) for f in pa_type}
+    if pa.types.is_list(pa_type):
+        return [_fit_pa_value(x, pa_type.value_type) for x in v]
+    return v
 
 
 def _write_action_parquet(
@@ -2778,8 +2792,11 @@ def _write_action_parquet(
     import pyarrow.parquet as pq
 
     clean = [_strip_empty_json(r) or {} for r in rows]
-    schema = pa.schema(list(_infer_pa_type(clean)))
-    table = pa.Table.from_pylist(clean, schema=schema)
+    row_type = _infer_pa_type(clean)
+    table = pa.Table.from_pylist(
+        [_fit_pa_value(r, row_type) for r in clean],
+        schema=pa.schema(list(row_type)),
+    )
     tmp = os.path.join(log_dir, f"_ckpt_tmp_{uuid.uuid4().hex}")
     os.makedirs(tmp, exist_ok=True)
     n = max(1, n_parts)
@@ -4140,11 +4157,41 @@ def _coerce_pv(pv: str, probe: Any) -> Any:
     return pv  # string probes (incl. ISO-serialized dates) compare as-is
 
 
+def _ts_may_intersect(fmin: Any, fmax: Any, lo: Any, hi: Any) -> bool:
+    """``_may_intersect`` for a timestamp probe: the stats compare as
+    instants, not as ISO text. A TIMESTAMP_MICROS footer renders as
+    ``2024-01-01T00:00:00+00:00``; delta-spark writes
+    ``2024-01-01T00:00:00.000Z``, truncated to milliseconds (so the max
+    gets a millisecond of slack). A collected TIMESTAMP probe is naive
+    local time (PySpark's convention); TIMESTAMP_NTZ stats and probes
+    are both naive wall-clock. Unparseable stats keep the file."""
+    import datetime as _dt
+
+    try:
+        fmin, fmax = (_dt.datetime.fromisoformat(v) for v in (fmin, fmax))
+    except (TypeError, ValueError):
+        return True
+    if fmin.tzinfo is not None:
+        lo, hi = (
+            p.astimezone(_dt.timezone.utc) if isinstance(p, _dt.datetime) else p
+            for p in (lo, hi)
+        )
+    try:
+        if hi is not None and fmin > hi:
+            return False
+        if lo is not None and fmax + _dt.timedelta(milliseconds=1) < lo:
+            return False
+    except TypeError:
+        return True  # naive vs aware, or a non-timestamp bound: keep
+    return True
+
+
 def _may_intersect(a: dict[str, Any], col: str, lo: Any, hi: Any) -> bool:
     """Can the add action's file contain rows with ``col`` in [lo, hi]?
     False only when footer stats or a typed partition value PROVE
     disjointness; every unknown keeps the file."""
-    lo, hi = _json_safe(lo), _json_safe(hi)
+    import datetime as _dt
+
     st = a.get("stats")
     if isinstance(st, str):
         st = json.loads(st)
@@ -4152,6 +4199,11 @@ def _may_intersect(a: dict[str, Any], col: str, lo: Any, hi: Any) -> bool:
         return False  # a zero-row file cannot contain matching rows
     fmin = (st or {}).get("minValues", {}).get(col)
     fmax = (st or {}).get("maxValues", {}).get(col)
+    if isinstance(lo, _dt.datetime) or isinstance(hi, _dt.datetime):
+        if fmin is None or fmax is None:
+            return True  # partition-value timestamps: keep
+        return _ts_may_intersect(fmin, fmax, lo, hi)
+    lo, hi = _json_safe(lo), _json_safe(hi)
     if fmin is None or fmax is None:
         pv = a.get("partitionValues", {}).get(col)
         probe = lo if lo is not None else hi
@@ -4217,15 +4269,38 @@ def _cdf_enabled(snap: DeltaSnapshot) -> bool:
     return snap.configuration.get(_CDF_PROP, "").lower() == "true"
 
 
+#: input bytes below which a DML write task is not worth its own file
+_WRITE_TASK_BYTES = 8 * 1024 * 1024
+
+
+def _sized(df: DataFrame, nbytes: int) -> DataFrame:
+    """``df`` narrowed to at most ceil(nbytes / _WRITE_TASK_BYTES)
+    partitions, so a small write lands in one file (per partition
+    value) instead of one per shuffle partition — a rewrite scattered
+    across every shuffle partition puts the changed keys in every
+    output file, and the next MERGE on those keys then matches, and
+    rewrites, all of them. The coalesce only merges tasks that would
+    each take less than about _WRITE_TASK_BYTES of input: a small write
+    runs in one task, a large one keeps the parallelism it had."""
+    return df.coalesce(max(1, -(-nbytes // _WRITE_TASK_BYTES)))
+
+
+def _files_bytes(snap: DeltaSnapshot, rels: list[str]) -> int:
+    return sum(int(snap.files[rel].get("size") or 0) for rel in rels)
+
+
 def _stage_cdf(
-    change_df: DataFrame, table_path: str, snap: DeltaSnapshot
+    change_df: DataFrame, table_path: str, snap: DeltaSnapshot, nbytes: int
 ) -> list[dict[str, Any]]:
     """Write change rows (schema + _change_type) under ``_change_data/``
-    and return the protocol's ``cdc`` actions. CDF files are invisible
-    to snapshot scans (cdc, not add) — they exist solely for
-    change-feed readers."""
+    as at most ceil(nbytes / _WRITE_TASK_BYTES) files, ``nbytes`` being
+    what the rows derive from, and return the protocol's ``cdc`` actions.
+    CDF files are invisible to snapshot scans (cdc, not add) — they
+    exist solely for change-feed readers."""
     rels = _stage_write(
-        _to_physical(change_df, snap.physical_names, _ids_if_id_mode(snap)),
+        _to_physical(
+            _sized(change_df, nbytes), snap.physical_names, _ids_if_id_mode(snap)
+        ),
         table_path,
         _phys_partition_cols(snap),
         subdir=CDF_DIR,
@@ -4676,13 +4751,21 @@ def _dml_commit(
     op: str,
     pred_desc: str,
     guard: _CommitGuard,
+    change_bytes: int = 0,
     extra_actions: list[dict[str, Any]] | None = None,
     commit_fn=None,
 ) -> int:
     """Rewrite ``candidates`` through ``survivors_of`` and author the
     remove+add (+cdc) commit — the shared tail of every copy-on-write
-    DML front end. ``extra_actions`` (e.g. an identity high-water-mark
-    metaData) land before commitInfo."""
+    DML front end. The rewrite is written as ``survivors_of`` shapes
+    it: a DELETE or UPDATE keeps the scan's split, one output per input
+    file (merging them would widen the stats intervals of a clustered
+    OPTIMIZE ZORDER layout and defeat later pruning); a MERGE sizes its
+    shuffle join by bytes itself. The change rows are sized by bytes,
+    not by shuffle width: at most ceil((candidates' bytes +
+    ``change_bytes``, e.g. a MERGE's source) / _WRITE_TASK_BYTES) cdc
+    files per partition value. ``extra_actions`` (e.g. an identity
+    high-water-mark metaData) land before commitInfo."""
     affected = _scan_files(spark, table_path, snap, candidates)
     survivors = survivors_of(affected)
 
@@ -4703,7 +4786,8 @@ def _dml_commit(
             )
         )
     if _cdf_enabled(snap):
-        actions.extend(_stage_cdf(changes_of(affected), table_path, snap))
+        nbytes = _files_bytes(snap, candidates) + change_bytes
+        actions.extend(_stage_cdf(changes_of(affected), table_path, snap, nbytes))
     if extra_actions:
         actions.extend(extra_actions)
     actions.append(
@@ -4941,7 +5025,11 @@ def merge_delta(
     reference's core write pattern (1_customer_data_processing.py:
     311-318 runs exactly this MERGE under optimistic concurrency).
     ``key`` may be a single column or a COMPOSITE key list (round 7).
-    ``when_matched="ignore"`` gives insert-only MERGE (J7).
+    ``when_matched="ignore"`` gives insert-only MERGE (J7); it never
+    changes a target row, so without the by-source clause it commits as
+    an APPEND of the unmatched source rows — add actions only, no
+    remove and no cdc (CDF reads the pure adds as inserts, and the
+    append-only ``stream_commit_batches`` accepts the commit).
     ``when_not_matched_by_source="delete"`` adds Delta's third clause —
     target rows with no source match are deleted (the full-sync MERGE
     that replaces a dimension from a feed); as on real Delta this makes
@@ -4954,9 +5042,13 @@ def merge_delta(
     Scale: two-clause discovery is one projected scan + one semi-join,
     rewrite bounded by files that actually contain matches (an interval
     prune would degrade to a full rewrite whenever insert keys widen
-    the source range); the by-source delete clause is inherently a
+    the source range), written as at most ceil((rewritten + source
+    bytes) / 8 MiB) files; the by-source delete clause is inherently a
     full-table rewrite and holds a whole-table conflict guard. The
-    two-clause conflict guard keeps the source's key interval, so a
+    insert-only append rewrites nothing: one anti-join against a key
+    scan of the files whose lead-key stats intersect the source's
+    [lo, hi], written as at most ceil(source bytes / 8 MiB) files. Both conflict guards without
+    the by-source clause keep the source's key interval, so a
     concurrent append whose stats prove it disjoint rebases cleanly."""
     if when_matched not in ("update", "ignore"):
         raise ValueError("when_matched must be 'update' or 'ignore'")
@@ -5013,6 +5105,18 @@ def merge_delta(
         lo, hi = stats["lo"], stats["hi"]
         if lo is None and when_not_matched_by_source is None:
             return snap.version, 0  # empty source: nothing to merge
+        id_extra = _merge_identity_hwm(src, snap, id_specs)
+        on_desc = " AND ".join(f"target.{k} = source.{k}" for k in keys)
+        # the cached source's materialized size, from plan stats (no job)
+        src_plan = src._jdf.queryExecution().optimizedPlan()
+        src_bytes = int(src_plan.stats().sizeInBytes())
+        if when_matched == "ignore" and when_not_matched_by_source is None:
+            v = _merge_append(
+                spark, table_path, snap, src, keys, lo, hi,
+                src_bytes=src_bytes, on_desc=on_desc,
+                extra_actions=id_extra, commit_fn=commit_fn,
+            )
+            return v, 0
         # no .distinct(): the guard above just PROVED the source keys
         # unique (n_rows == n_keys or we raised), so the dedup was a
         # no-op costing a full exchange before every semi/anti-join
@@ -5073,7 +5177,7 @@ def merge_delta(
                     for c in tcols
                 ]
             )
-        else:  # insert-only: matched target rows keep their current values
+        else:  # ignore + by-source delete: matched rows keep their values
             replaced = affected
             preimage = affected.limit(0)
             postimage = matched_src.limit(0)
@@ -5096,6 +5200,7 @@ def merge_delta(
                 read_files=set(candidates),
                 read_whole_table=True,
             )
+        guard.has_metadata = bool(id_extra)
 
         def _changes(_df: DataFrame) -> DataFrame:
             pre = preimage.withColumn("_change_type", F.lit("update_preimage"))
@@ -5106,61 +5211,14 @@ def merge_delta(
                 deleted.withColumn("_change_type", F.lit("delete"))
             )
 
-        id_extra: list[dict[str, Any]] = []
-        if id_specs:
-            # BY DEFAULT identity: the merged ids are explicit inserts —
-            # the commit must advance the high-water mark past them or a
-            # later system assignment would collide (one aggregate over
-            # the already-cached source)
-            aggs = []
-            for c, sp in id_specs.items():
-                aggs.append(
-                    (F.max(c) if sp["step"] > 0 else F.min(c)).alias(c)
-                )
-                aggs.append(
-                    F.sum(F.col(c).isNull().cast("int")).alias(f"__null_{c}")
-                )
-            row = src.agg(*aggs).collect()[0]
-            hwm_updates: dict[str, int] = {}
-            for c, sp in id_specs.items():
-                if row[f"__null_{c}"]:
-                    raise DeltaProtocolError(
-                        f"MERGE source has NULLs in identity column {c!r}"
-                    )
-                if row[c] is None:
-                    continue  # empty source
-                ext, old, step = int(row[c]), sp["hwm"], sp["step"]
-                if (
-                    old is None
-                    or (step > 0 and ext > old)
-                    or (step < 0 and ext < old)
-                ):
-                    hwm_updates[c] = ext
-            if hwm_updates:
-                id_extra.append(
-                    {
-                        "metaData": {
-                            # the table identity is immutable: re-emit the existing
-                            # metaData.id (a fresh uuid would read as table replacement)
-                            "id": snap.metadata_id or str(uuid.uuid4()),
-                            "format": {"provider": "parquet", "options": {}},
-                            "schemaString": _patch_identity_hwm(
-                                snap.schema, hwm_updates
-                            ).json(),
-                            "partitionColumns": snap.partition_columns,
-                            "configuration": snap.configuration,
-                        }
-                    }
-                )
-                guard.has_metadata = True
-
-        on_desc = " AND ".join(f"target.{k} = source.{k}" for k in keys)
+        nbytes = _files_bytes(snap, candidates) + src_bytes
         v = _dml_commit(
             spark, table_path, snap, candidates,
-            survivors_of=lambda _df: new_content,
+            survivors_of=lambda _df: _sized(new_content, nbytes),
             changes_of=_changes,
             op="MERGE", pred_desc=on_desc, guard=guard,
-            extra_actions=id_extra, commit_fn=commit_fn,
+            change_bytes=src_bytes, extra_actions=id_extra,
+            commit_fn=commit_fn,
         )
     finally:
         # release the cached source on EVERY path — including the
@@ -5168,6 +5226,115 @@ def merge_delta(
         # review finding #7: each conflict leaked a cached copy)
         src.unpersist()
     return v, len(candidates)
+
+
+def _merge_identity_hwm(
+    src: DataFrame, snap: DeltaSnapshot, id_specs: dict[str, dict[str, Any]]
+) -> list[dict[str, Any]]:
+    """The metaData action advancing BY DEFAULT identity high-water
+    marks past a MERGE source's explicit ids (empty when none moves) —
+    without it a later system assignment would collide. One aggregate
+    over the already-cached source."""
+    if not id_specs:
+        return []
+    aggs = []
+    for c, sp in id_specs.items():
+        aggs.append((F.max(c) if sp["step"] > 0 else F.min(c)).alias(c))
+        aggs.append(F.sum(F.col(c).isNull().cast("int")).alias(f"__null_{c}"))
+    row = src.agg(*aggs).collect()[0]
+    hwm_updates: dict[str, int] = {}
+    for c, sp in id_specs.items():
+        if row[f"__null_{c}"]:
+            raise DeltaProtocolError(
+                f"MERGE source has NULLs in identity column {c!r}"
+            )
+        if row[c] is None:
+            continue  # empty source
+        ext, old, step = int(row[c]), sp["hwm"], sp["step"]
+        if old is None or (step > 0 and ext > old) or (step < 0 and ext < old):
+            hwm_updates[c] = ext
+    if not hwm_updates:
+        return []
+    return [
+        {
+            "metaData": {
+                # the table identity is immutable: re-emit the existing
+                # metaData.id (a fresh uuid would read as table replacement)
+                "id": snap.metadata_id or str(uuid.uuid4()),
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": _patch_identity_hwm(
+                    snap.schema, hwm_updates
+                ).json(),
+                "partitionColumns": snap.partition_columns,
+                "configuration": snap.configuration,
+            }
+        }
+    ]
+
+
+def _merge_append(
+    spark: SparkSession,
+    table_path: str,
+    snap: DeltaSnapshot,
+    src: DataFrame,
+    keys: list[str],
+    lo: Any,
+    hi: Any,
+    *,
+    src_bytes: int,
+    on_desc: str,
+    extra_actions: list[dict[str, Any]],
+    commit_fn=None,
+) -> int:
+    """Insert-only MERGE committed as an append. A source row can only
+    match inside files whose lead-key stats intersect the source's
+    [lo, hi], so one key scan of those files anti-joined against the
+    (cached, duplicate-free) source yields the inserts; the commit holds
+    their add actions only — no remove, no cdc — written as
+    at most ceil(``src_bytes`` / _WRITE_TASK_BYTES) files. The conflict guard
+    reads those files under the same interval: a concurrent append
+    that may hold a key in [lo, hi] aborts, a disjoint one rebases.
+    Returns the new version (``snap.version`` when nothing is
+    inserted and no identity mark moves)."""
+    candidates, _ = prune_files_by_stats(snap, keys[0], lo, hi)
+    target_keys = _scan_files(spark, table_path, snap, candidates).select(*keys)
+    inserts = src.join(target_keys, keys, "left_anti")
+    pcols = _phys_partition_cols(snap)
+    added = _stage_write(
+        _to_physical(
+            _sized(inserts, src_bytes), snap.physical_names, _ids_if_id_mode(snap)
+        ),
+        table_path,
+        pcols,
+    )
+    now_ms = int(time.time() * 1000)
+    stat_cols = _phys_stat_cols(snap)
+    actions: list[dict[str, Any]] = []
+    for rel in added:
+        a = _add_action(table_path, rel, pcols, stat_cols, now_ms)
+        if _add_num_records(table_path, a["add"]):
+            actions.append(a)
+        else:  # nothing inserted: Spark still writes one schema-only file
+            os.remove(os.path.join(table_path, rel))
+    actions.extend(extra_actions)
+    if not actions:
+        return snap.version
+    actions.append(
+        {
+            "commitInfo": {
+                "timestamp": now_ms,
+                "operation": "MERGE",
+                "operationParameters": {"predicate": on_desc},
+            }
+        }
+    )
+    guard = _CommitGuard(
+        has_metadata=bool(extra_actions),
+        read_files=set(candidates),
+        predicate=(snap.physical(keys[0]), lo, hi),
+        ict=_ict_on(snap.configuration),
+    )
+    return (commit_fn or _commit)(table_path, actions, guard, snap.version)
 
 
 def _dv_matched_blobs(
@@ -5335,7 +5502,8 @@ def delete_delta_dv(
         deleted_rows = _scan_files(
             spark, table_path, snap, list(per_file)
         ).filter(pred).withColumn("_change_type", F.lit("delete"))
-        actions.extend(_stage_cdf(deleted_rows, table_path, snap))
+        nbytes = _files_bytes(snap, list(per_file))
+        actions.extend(_stage_cdf(deleted_rows, table_path, snap, nbytes))
     actions.append(
         {
             "commitInfo": {
@@ -5413,7 +5581,10 @@ def update_delta_dv(
     if _cdf_enabled(snap):
         pre = matched.withColumn("_change_type", F.lit("update_preimage"))
         post = updated.withColumn("_change_type", F.lit("update_postimage"))
-        actions.extend(_stage_cdf(pre.unionByName(post), table_path, snap))
+        nbytes = _files_bytes(snap, list(per_file))
+        actions.extend(
+            _stage_cdf(pre.unionByName(post), table_path, snap, nbytes)
+        )
     actions.append(
         {
             "commitInfo": {

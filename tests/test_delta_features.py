@@ -10,15 +10,19 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from mergermetrics_lakehouse_pipeline_spark.sources.delta_log import (
+    ConcurrentModificationError,
     DeltaProtocolError,
+    _commit,
     delete_delta,
     delete_delta_dv,
+    merge_delta,
     optimize_delta,
     overwrite_partitions_delta,
     read_cdf,
@@ -29,6 +33,7 @@ from mergermetrics_lakehouse_pipeline_spark.sources.delta_log import (
     stream_commit_batches,
     truncate_log,
     update_delta,
+    update_rows,
     vacuum_delta,
     write_checkpoint,
     write_delta,
@@ -681,11 +686,18 @@ def test_merge_delta_update_and_insert_with_file_surgery(spark, tbl):
         merge_delta(spark, tbl, dup, "k")
 
 
-def test_merge_delta_insert_only_and_cdf(spark, tbl):
-    from mergermetrics_lakehouse_pipeline_spark.sources.delta_log import (
-        merge_delta,
-    )
+def _action_kinds(tbl, v):
+    with open(
+        os.path.join(tbl, "_delta_log", f"{v:020d}.json"), encoding="utf-8"
+    ) as fh:
+        return Counter(next(iter(json.loads(line))) for line in fh)
 
+
+def test_merge_delta_insert_only_and_cdf(spark, tbl):
+    """An insert-only MERGE changes no target row, so it commits as an
+    append: add actions only, which CDF reads as inserts and the
+    append-only commit stream accepts; re-applying the batch inserts
+    nothing and writes no commit."""
     df = _kv(spark, 20)
     write_delta(
         df, tbl, mode="overwrite",
@@ -694,17 +706,20 @@ def test_merge_delta_insert_only_and_cdf(spark, tbl):
     source = spark.createDataFrame(
         [(5, 999), (6, 999), (50, 500)], "k long, v long"
     )
-    merge_delta(spark, tbl, source, "k", when_matched="ignore")
+    assert merge_delta(spark, tbl, source, "k", when_matched="ignore") == (1, 0)
     got = _rows(read_delta(spark, tbl))
     # matched rows keep current values; only k=50 inserted
     assert got == _rows(df) | {(50, 500)}
+    assert set(_action_kinds(tbl, 1)) == {"add", "commitInfo"}
 
     cdf = read_cdf(spark, tbl, from_version=1)
-    counts = dict(
-        (r["_change_type"], r["n"])
-        for r in cdf.groupBy("_change_type").agg(F.count("*").alias("n")).collect()
-    )
-    assert counts == {"insert": 1}
+    assert _rows(cdf.select("k", "v", "_change_type")) == {(50, 500, "insert")}
+    streamed = [
+        (v, _rows(b)) for v, b in stream_commit_batches(spark, tbl, from_version=1)
+    ]
+    assert streamed == [(1, {(50, 500)})]
+    assert merge_delta(spark, tbl, source, "k", when_matched="ignore") == (1, 0)
+    assert _rows(read_delta(spark, tbl)) == got
 
     # update MERGE with CDF: pre+post+insert captured
     source2 = spark.createDataFrame([(0, 7), (60, 6)], "k long, v long")
@@ -719,6 +734,121 @@ def test_merge_delta_insert_only_and_cdf(spark, tbl):
         "update_postimage": 1,
         "insert": 1,
     }
+
+
+def _racing_append(df):
+    """A commit_fn that lets a concurrent append of ``df`` win the
+    version the caller read, then commits the caller's actions."""
+
+    def commit_fn(table_path, actions, guard, base_version):
+        write_delta(df, table_path, mode="append")
+        return _commit(table_path, actions, guard, base_version)
+
+    return commit_fn
+
+
+def test_insert_only_merge_conflicts_only_inside_its_key_range(spark, tbl):
+    """The append's conflict guard is the source's lead-key interval: a
+    concurrent append that may hold a key in [lo, hi] aborts the MERGE,
+    a provably disjoint one lets it rebase."""
+    write_delta(_kv(spark, 20), tbl, mode="overwrite")  # v0: k in [0, 19]
+    batch = spark.createDataFrame([(30, 1), (35, 1)], "k long, v long")
+    overlapping = spark.createDataFrame([(33, 0)], "k long, v long")
+    with pytest.raises(ConcurrentModificationError, match="predicate"):
+        merge_delta(
+            spark, tbl, batch, "k", when_matched="ignore",
+            commit_fn=_racing_append(overlapping),
+        )  # the racer holds v1
+    disjoint = spark.createDataFrame([(90, 0)], "k long, v long")
+    v, _ = merge_delta(
+        spark, tbl, batch, "k", when_matched="ignore",
+        commit_fn=_racing_append(disjoint),
+    )
+    assert v == 3  # the racer took v2, the MERGE rebased onto v3
+    assert {r.k for r in read_delta(spark, tbl).collect()} == set(
+        range(20)
+    ) | {30, 33, 35, 90}
+
+
+def test_insert_only_merge_advances_identity_hwm(spark, tbl):
+    write_delta(
+        spark.range(5).select(F.concat(F.lit("x"), F.col("id")).alias("name")),
+        tbl, mode="overwrite",
+        identity={"uid": {"start": 1, "step": 1, "allow_explicit": True}},
+    )  # x0..x4 -> uid 1..5
+    src = spark.createDataFrame([("m0", 500), ("x1", 2)], "name string, uid long")
+    merge_delta(spark, tbl, src, "name", when_matched="ignore")
+    write_delta(
+        spark.range(2).select(F.concat(F.lit("p"), F.col("id")).alias("name")),
+        tbl, mode="append",
+    )
+    ids = sorted(r.uid for r in read_delta(spark, tbl).collect())
+    assert ids == [1, 2, 3, 4, 5, 500, 501, 502]
+
+
+def _restat(tbl, v, col, lo, hi):
+    """Give version ``v``'s single-row add action the ``col`` stats a
+    foreign writer would (Spark's default INT96 timestamps carry no
+    footer stats, so this engine writes none for them)."""
+    path = os.path.join(tbl, "_delta_log", f"{v:020d}.json")
+    with open(path, encoding="utf-8") as fh:
+        actions = [json.loads(line) for line in fh]
+    for a in actions:
+        if "add" in a:
+            a["add"]["stats"] = json.dumps(
+                {"numRecords": 1, "minValues": {col: lo}, "maxValues": {col: hi}}
+            )
+    with open(path, "w", encoding="utf-8") as fh:
+        fh.writelines(json.dumps(a) + "\n" for a in actions)
+
+
+def test_insert_only_merge_on_timestamp_key_reapplies_as_noop(spark, tbl):
+    """Timestamp stats prune as instants, not ISO text: re-applying a
+    batch whose max equals a file's min inserts nothing, whether the
+    stats are in pyarrow's ``+00:00`` form or delta-spark's
+    millisecond-truncated ``.000Z`` form."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    batch = spark.createDataFrame([(t0, 1)], "ts timestamp, v long")
+    write_delta(batch.coalesce(1), tbl, mode="overwrite")  # v0: one file
+    for stat in ("2024-01-01T00:00:00+00:00", "2024-01-01T00:00:00.000Z"):
+        _restat(tbl, 0, "ts", stat, stat)
+        assert merge_delta(spark, tbl, batch, "ts", when_matched="ignore") == (
+            0, 0,
+        )
+
+    t1 = t0 + dt.timedelta(microseconds=500)  # stats truncate it to t0
+    later = spark.createDataFrame([(t1, 2)], "ts timestamp, v long")
+    write_delta(later.coalesce(1), tbl, mode="append")  # v1
+    _restat(tbl, 1, "ts", "2024-01-01T00:00:00.000Z", "2024-01-01T00:00:00.000Z")
+    assert merge_delta(spark, tbl, later, "ts", when_matched="ignore") == (1, 0)
+    assert _rows(read_delta(spark, tbl)) == {(t0, 1), (t1, 2)}
+
+
+def test_dml_rewrite_writes_one_file_on_small_tables(spark, tbl):
+    """Copy-on-write output is sized by bytes, not by shuffle width: on
+    a small CDF table each MERGE / UPDATE adds one data file and one
+    cdc file, so a second MERGE on the same keys rewrites that one file
+    instead of every file the first one scattered the keys across."""
+    write_delta(
+        _kv(spark, 40).repartitionByRange(4, "k"), tbl, mode="overwrite",
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )  # v0: four files
+    src = spark.createDataFrame(
+        [(12, -1), (13, -1), (100, -1)], "k long, v long"
+    )
+    merge_delta(spark, tbl, src, "k")  # v1: updates 12, 13, inserts 100
+    assert _action_kinds(tbl, 1)["add"] == 1
+    assert _action_kinds(tbl, 1)["cdc"] == 1
+    update_rows(spark, tbl, "k = 100", {"v": "v - 1"})  # v2
+    assert _action_kinds(tbl, 2)["add"] == 1
+    assert _action_kinds(tbl, 2)["cdc"] == 1
+    _v, rewritten = merge_delta(spark, tbl, src, "k")  # v3
+    assert rewritten == 1
+    assert _action_kinds(tbl, 3)["remove"] == 1
+    assert _action_kinds(tbl, 3)["add"] == 1
+    assert _action_kinds(tbl, 3)["cdc"] == 1
 
 
 # --------------------------------------------------------------------------

@@ -3,11 +3,15 @@
 Each test pins a behavior an optimization could have silently changed:
 the pyarrow checkpoint writer/reader round-trip (None-stripping parity
 with the old to_json path, multi-part folding), the bpe_merges cache cap
-(<= 2 live generations mid-loop, none after exit), and the salted join's
-map-column tolerance (ADVICE r14 #1).
+(<= 2 live generations mid-loop, none after exit), the salted join's
+map-column tolerance (ADVICE r14 #1), and the checkpoint writer's
+promotion of mixed-type foreign action values to string.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -18,6 +22,7 @@ from mergermetrics_lakehouse_pipeline_spark.sources.delta_log import (
     _scan_log,
     read_delta,
     snapshot,
+    truncate_log,
     write_checkpoint,
     write_delta,
 )
@@ -79,6 +84,40 @@ def test_checkpoint_more_parts_than_rows(spark):
     _commits, ckpts, _comps = _scan_log(root)
     assert len(ckpts[max(ckpts)]) == 8
     assert read_delta(spark, root).count() == 5
+
+
+def test_checkpoint_promotes_mixed_type_foreign_values(spark):
+    """A foreign log may type one action field differently across
+    commits. Checkpointing promotes such a field to string (non-strings
+    as their JSON text) instead of refusing the log, and the log
+    truncated to that checkpoint still replays."""
+    root = scratch_dir(prefix="r15_ckpt_mixed_") + "/t"
+    write_delta(spark.range(4).select(F.col("id").alias("k")), root, mode="overwrite")
+    write_delta(spark.range(4, 8).select(F.col("id").alias("k")), root, mode="append")
+    tags_by_version = {
+        0: {"INSERTION_TIME": 1700000000000, "ZORDER": {"by": ["k"]}},
+        1: {"INSERTION_TIME": "1700000000001", "ZORDER": "k"},
+    }
+    for v, tags in tags_by_version.items():
+        path = os.path.join(root, "_delta_log", f"{v:020d}.json")
+        with open(path, encoding="utf-8") as fh:
+            actions = [json.loads(line) for line in fh]
+        for a in actions:
+            if "add" in a:
+                a["add"]["tags"] = tags
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.writelines(json.dumps(a) + "\n" for a in actions)
+
+    write_checkpoint(spark, root)
+    truncate_log(root)
+    tags = {
+        tuple(sorted(a["tags"].items())) for a in snapshot(spark, root).files.values()
+    }
+    assert tags == {
+        (("INSERTION_TIME", "1700000000000"), ("ZORDER", '{"by": ["k"]}')),
+        (("INSERTION_TIME", "1700000000001"), ("ZORDER", "k")),
+    }
+    assert read_delta(spark, root).count() == 8
 
 
 def test_bpe_merges_caches_capped_at_two(spark):
