@@ -8,20 +8,20 @@ DML surface for the portable engine:
 
 - pure transformations (`delete_where`, `update_where`) that return the
   post-DML table content — composable, testable, side-effect-free;
-- table-level appliers (`delete_from_table`, `update_table`) that route
-  to Delta's native DELETE/UPDATE on a cluster and otherwise apply the
-  same staged two-write used by the MERGE fallback
-  (operators/merge.py:_merge_table): materialize to a staging table,
-  overwrite the target from the fresh scan, drop staging — so the
+- table-level appliers (`delete_from_table`, `update_table`) for catalog
+  (parquet) tables that apply the same staged two-write as the MERGE
+  operators (operators/merge.py:_merge_table): materialize to a staging
+  table, overwrite the target from the fresh scan, drop staging — so the
   target truncation can never recompute from the table being truncated.
+  Delta tables use ``sources.delta_log.delete_delta`` / ``update_delta``.
 
 Scale: both operations are one filter/projection pass over the table —
-no shuffle at all (plan-narrow); the cost is the rewrite of affected
-files. On Delta, file skipping (stats/Z-order) bounds the rewrite to
-files whose min/max overlap the predicate; the parquet fallback rewrites
-the whole table, the honest cost of DML without a transaction log (for
-partition-aligned predicates, pair with overwrite_partitions to bound
-the rewrite to affected partitions).
+no shuffle at all (plan-narrow); the cost is the rewrite. The staged
+rewrite covers the whole table, the honest cost of DML without a
+transaction log (for partition-aligned predicates, pair with
+overwrite_partitions to bound the rewrite to affected partitions); on
+Delta tables, file skipping (stats/Z-order) bounds the rewrite to files
+whose min/max overlap the predicate.
 """
 
 from __future__ import annotations
@@ -31,7 +31,7 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import delta_available
+from ..sources.catalog import staged_overwrite
 
 
 def delete_where(df: DataFrame, condition: Column) -> DataFrame:
@@ -65,24 +65,11 @@ def update_where(
     )
 
 
-def _staged_overwrite(spark: SparkSession, table_name: str, content: DataFrame) -> None:
-    """Shared uuid-suffixed staging rewrite
-    (sources/catalog.py:staged_overwrite — no self-read overwrite, no
-    catalog-less window, concurrency-safe staging names)."""
-    from ..sources.catalog import staged_overwrite
-
-    staged_overwrite(spark, table_name, content)
-
-
 def delete_from_table(
     spark: SparkSession, table_name: str, condition_sql: str
 ) -> None:
-    """DELETE FROM table WHERE condition — Delta-native on a cluster,
-    staged rewrite on parquet."""
-    if delta_available():
-        spark.sql(f"DELETE FROM {table_name} WHERE {condition_sql}")
-        return
-    _staged_overwrite(
+    """DELETE FROM table WHERE condition, as a staged rewrite."""
+    staged_overwrite(
         spark, table_name, delete_where(spark.table(table_name), F.expr(condition_sql))
     )
 
@@ -93,14 +80,9 @@ def update_table(
     condition_sql: str,
     set_map: Mapping[str, str],
 ) -> None:
-    """UPDATE table SET col = expr, ... WHERE condition — Delta-native on
-    a cluster, staged rewrite on parquet. ``set_map`` values are SQL
-    expressions over the row."""
-    if delta_available():
-        assignments = ", ".join(f"{c} = {e}" for c, e in set_map.items())
-        spark.sql(f"UPDATE {table_name} SET {assignments} WHERE {condition_sql}")
-        return
-    _staged_overwrite(
+    """UPDATE table SET col = expr, ... WHERE condition, as a staged
+    rewrite. ``set_map`` values are SQL expressions over the row."""
+    staged_overwrite(
         spark,
         table_name,
         update_where(

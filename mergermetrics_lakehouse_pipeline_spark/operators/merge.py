@@ -10,23 +10,23 @@ The reference consolidates every dimension and fact with Delta
 - J7 insert-only append-dedupe ``whenNotMatchedInsertAll()``
   (1_full_load_fact.py:182-186)
 
-This module provides both physical strategies behind one API:
-
-- **Delta path** (when delta-spark is importable): true transactional
-  MERGE — file-matching inner join + rewrite, optimistic concurrency.
-- **DataFrame path** (``merge_dataframes``): the pure-Spark rewrite
-  ``source-resolved-rows UNION target-rows-without-a-source-match``.
-  Semantics match Delta MERGE for unique-key sources: matched target rows
-  take the source (or mapped) values, unmatched target rows pass through,
-  unmatched source rows are inserted. Like Delta, multiple source matches
-  for one target key are rejected (Delta raises
-  DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW) unless the caller dedupes
-  first.
+On catalog (parquet) tables this module implements all three as one
+pure-Spark rewrite (``merge_dataframes``):
+``source-resolved-rows UNION target-rows-without-a-source-match``.
+Semantics match Delta MERGE for unique-key sources: matched target rows
+take the source (or mapped) values, unmatched target rows pass through,
+unmatched source rows are inserted. Like Delta, multiple source matches
+for one target key are rejected (Delta raises
+DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW) unless the caller dedupes
+first. The table-level entry points (``upsert_all``, ``upsert_mapped``,
+``insert_only``) write the merged content back through
+``sources.catalog.staged_overwrite``; Delta tables merge through
+``sources.delta_log.merge_delta`` instead.
 
 Scale: one shuffle on the merge keys for the join + one for the anti
 side; with the target bucketed/partitioned on the keys (see
 sources/catalog.py) the join co-locates and the anti-join reuses the same
-exchange. At 100 TB the Delta path additionally prunes to matched files.
+exchange.
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import delta_available
+from ..sources.catalog import staged_overwrite
 
 
 def _key_condition(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> Column:
@@ -121,40 +121,6 @@ def merge_dataframes(
     return joined.select(*[resolved(c) for c in tgt_cols])
 
 
-def _delta_merge(
-    spark_table: str,
-    source: DataFrame,
-    keys: Sequence[str],
-    *,
-    update_set: Mapping[str, Column] | None,
-    insert_values: Mapping[str, Column] | None,
-    insert_only_flag: bool,
-) -> None:
-    from delta.tables import DeltaTable  # type: ignore
-
-    spark = source.sparkSession
-    dt = DeltaTable.forName(spark, spark_table)
-    cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-    m = dt.alias("t").merge(source.alias("s"), cond)
-    if insert_only_flag:
-        m = m.whenNotMatchedInsertAll()
-    else:
-        # mirror merge_dataframes' resolved() defaults: a missing map means
-        # "all source columns", never an empty set/values dict (which Delta
-        # rejects or turns into insert-nothing)
-        m = (
-            m.whenMatchedUpdate(set=dict(update_set))
-            if update_set
-            else m.whenMatchedUpdateAll()
-        )
-        m = (
-            m.whenNotMatchedInsert(values=dict(insert_values))
-            if insert_values
-            else m.whenNotMatchedInsertAll()
-        )
-    m.execute()
-
-
 def upsert_all(
     table_name: str, source: DataFrame, keys: Sequence[str]
 ) -> None:
@@ -187,16 +153,6 @@ def _merge_table(
     insert_only_flag: bool,
 ) -> None:
     spark = source.sparkSession
-    if delta_available():
-        _delta_merge(
-            table_name,
-            source,
-            keys,
-            update_set=update_set,
-            insert_values=insert_values,
-            insert_only_flag=insert_only_flag,
-        )
-        return
     target = spark.table(table_name)
     merged = merge_dataframes(
         target,
@@ -206,8 +162,6 @@ def _merge_table(
         insert_values=insert_values,
         insert_only=insert_only_flag,
     )
-    # Non-Delta overwrite-in-place via the shared uuid-suffixed staging
-    # rewrite (sources/catalog.py:staged_overwrite — rationale there).
-    from ..sources.catalog import staged_overwrite
-
+    # overwrite-in-place via the shared uuid-suffixed staging rewrite
+    # (sources/catalog.py:staged_overwrite — rationale there)
     staged_overwrite(spark, table_name, merged)

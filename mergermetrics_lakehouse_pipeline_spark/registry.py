@@ -320,7 +320,7 @@ def q_join_semi_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["J-anti"],
 )
 def q_join_anti_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti join — the engine's MERGE fallback and the README:257-266
+    """Anti join — the engine's insert-only MERGE and the README:257-266
     join-coverage checks are built on this."""
     c = T(spark, sf_dir, "customer")
     o = T(spark, sf_dir, "orders")
@@ -720,7 +720,7 @@ def q_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Set operations (SURVEY §2.7) — engine extras the MERGE fallback needs
+# Set operations (SURVEY §2.7) — engine extras the catalog-table MERGE needs
 # ---------------------------------------------------------------------------
 
 

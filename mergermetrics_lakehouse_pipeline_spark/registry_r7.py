@@ -1739,7 +1739,7 @@ def q_events_value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         dev.select("event_type", "dev")
-        .join(mad, "event_type")
+        .join(F.broadcast(mad), "event_type")  # one row per event_type
         .groupBy(
             "event_type",
             F.col("n").cast("bigint").alias("n_events"),

@@ -24,22 +24,6 @@ BRONZE = "fmcg_bronze"
 SILVER = "fmcg_silver"
 GOLD = "fmcg_gold"
 
-_DELTA_AVAILABLE: bool | None = None
-
-
-def delta_available() -> bool:
-    """True when delta-spark is importable (it is not in the test container);
-    the merge layer falls back to an anti-join+union rewrite otherwise."""
-    global _DELTA_AVAILABLE
-    if _DELTA_AVAILABLE is None:
-        try:
-            import delta  # noqa: F401
-
-            _DELTA_AVAILABLE = True
-        except ImportError:
-            _DELTA_AVAILABLE = False
-    return _DELTA_AVAILABLE
-
 
 def get_spark(
     app_name: str = "mergermetrics-lakehouse-spark",
@@ -93,11 +77,6 @@ def get_spark(
     }
     if warehouse_dir:
         conf["spark.sql.warehouse.dir"] = warehouse_dir
-    if delta_available():
-        conf["spark.sql.extensions"] = "io.delta.sql.DeltaSparkSessionExtension"
-        conf["spark.sql.catalog.spark_catalog"] = (
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog"
-        )
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

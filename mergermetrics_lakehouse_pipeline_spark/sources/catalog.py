@@ -1,15 +1,13 @@
 """Catalog / DDL helpers (SURVEY §2.1 S3-S12, S15).
 
 Thin wrappers so the pipelines read as declaratively as the reference's
-notebooks while staying portable between Delta (cluster) and parquet
-``saveAsTable`` (this container).
+notebooks. Catalog tables are parquet ``saveAsTable`` tables; Delta tables
+are served by the engine's own transaction log (``sources/delta_log.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..session import delta_available
 
 
 def table_exists(spark: SparkSession, name: str) -> bool:
@@ -25,14 +23,12 @@ def write_table(
     *,
     partition_by: list[str] | None = None,
     merge_schema: bool = False,
-    enable_cdf: bool = True,
     path: str | None = None,
 ) -> None:
-    """S3/S4/S5/S6: table sink.
-
-    Delta path: CDF property + mergeSchema exactly as the reference sets
-    them on every write (e.g. 1_customer_data_processing.py:50-53).
-    Parquet fallback: same API minus table properties.
+    """S3/S4/S5: parquet table sink, with mergeSchema as the reference
+    sets it on every write (e.g. 1_customer_data_processing.py:50-53).
+    The reference's CDF table property (S6) belongs to Delta tables,
+    which ``sources/delta_log.py`` writes.
 
     ``partition_by`` is the engine's scale upgrade: the reference's gold
     fact is unpartitioned (it hand-rolls month pruning); we partition by
@@ -42,16 +38,13 @@ def write_table(
     the catalog remembers it for appends), so callers can sink to scratch
     storage without touching the session warehouse dir.
     """
-    fmt = "delta" if delta_available() else "parquet"
-    writer = df.write.format(fmt).mode(mode)
+    writer = df.write.format("parquet").mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if path is not None:
         writer = writer.option("path", path)
     if merge_schema:
         writer = writer.option("mergeSchema", "true")
-    if enable_cdf and fmt == "delta":
-        writer = writer.option("delta.enableChangeDataFeed", "true")
     writer.saveAsTable(name)
 
 
@@ -106,8 +99,7 @@ def copy_into(
     """
     reader = spark.read.option("header", header)
     src = reader.format(file_format).load(source_path).selectExpr(*select_exprs)
-    fmt = "delta" if delta_available() else "parquet"
-    src.write.format(fmt).mode("append").saveAsTable(table)
+    src.write.format("parquet").mode("append").saveAsTable(table)
 
 
 def staged_overwrite(spark: SparkSession, name: str, content: DataFrame) -> None:
@@ -122,8 +114,8 @@ def staged_overwrite(spark: SparkSession, name: str, content: DataFrame) -> None
     metadata. The staging name is uuid-suffixed so concurrent rewrites
     of the same table cannot drop each other's staging tables mid-write
     (they still race on the final overwrite — last writer wins, which is
-    the plain-parquet ceiling; Delta MERGE/DELETE is the transactional
-    path when available).
+    the plain-parquet ceiling; ``sources/delta_log.py`` is the
+    transactional path).
 
     Durability: the staging table is dropped ONLY after the target
     overwrite succeeds. If the target write fails mid-overwrite (executor
@@ -231,8 +223,8 @@ def write_version(df: DataFrame, root: str) -> int:
     concurrent reader of ``read_version(latest)`` never sees a partial
     snapshot; a crashed writer leaves only an unreferenced directory.
     Snapshots share nothing (full copies) — the honest cost of
-    versioning without a transaction log; for sharing, Delta is the
-    real answer and write_table's Delta branch takes over on a cluster.
+    versioning without a transaction log; for sharing, Delta tables
+    (``sources/delta_log.py``) are the real answer.
     """
     import os
 

@@ -5138,7 +5138,6 @@ def merge_delta(
 
         affected = _scan_files(spark, table_path, snap, candidates)
         tgt_keys = affected.select(*keys).distinct()
-        matched_src = src.join(tgt_keys, keys, "left_semi")
         inserts = src.join(tgt_keys, keys, "left_anti")
         if when_matched == "update":
             # per-TARGET-row update via left join: a duplicate-key target
@@ -5171,16 +5170,11 @@ def merge_delta(
                     for c in tcols
                 ]
             )
-            matched_kept = joined.filter(F.col("__matched").isNotNull()).select(
-                *[
-                    F.col(f"__src_{c}").alias(c) if c not in keys else F.col(c)
-                    for c in tcols
-                ]
-            )
+            matched_kept = postimage
         else:  # ignore + by-source delete: matched rows keep their values
             replaced = affected
             preimage = affected.limit(0)
-            postimage = matched_src.limit(0)
+            postimage = src.limit(0)  # src is projected to tcols above
             matched_kept = affected.join(src_keys, keys, "left_semi")
         deleted = affected.limit(0)
         if when_not_matched_by_source == "delete":

@@ -1,11 +1,19 @@
-"""Unit tests for the MERGE fallback (Delta-parity semantics)."""
+"""Unit tests for the catalog-table MERGE operators (Delta-parity
+semantics): the pure ``merge_dataframes`` rewrite and the table-level
+entry points that apply it to a saved parquet table."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from mergermetrics_lakehouse_pipeline_spark.operators.merge import merge_dataframes
+from mergermetrics_lakehouse_pipeline_spark.operators.merge import (
+    insert_only,
+    merge_dataframes,
+    upsert_all,
+    upsert_mapped,
+)
+from mergermetrics_lakehouse_pipeline_spark.sources.catalog import write_table
 
 
 @pytest.fixture()
@@ -67,3 +75,71 @@ def test_multi_key_merge(spark):
     source = spark.createDataFrame([(1, "2025", 99.0), (2, "2025", 5.0)], ["k", "y", "p"])
     out = {(r.k, r.y): r.p for r in merge_dataframes(target, source, ["k", "y"]).collect()}
     assert out[(1, "2024")] == 10.0 and out[(1, "2025")] == 99.0 and out[(2, "2025")] == 5.0
+
+
+# --- table-level entry points (J5/J6/J7) on a saved parquet table ---------
+
+_TARGET_ROWS = [(1, "a", 10.0), (2, "b", 20.0), (None, "n", 0.0)]
+_TARGET_SCHEMA = "k bigint, v string, x double"
+
+
+def _check_table_merge(spark, name, apply, **merge_kwargs):
+    """Save the fixture rows as ``name``, run ``apply(name, source)`` and
+    compare the table with ``merge_dataframes`` on the same inputs; the
+    staged rewrite must leave no ``__stage_`` table behind."""
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    write_table(spark.createDataFrame(_TARGET_ROWS, _TARGET_SCHEMA), name)
+    source = spark.createDataFrame(
+        [(2, "B", 99.0), (3, "c", 30.0), (None, "N", 5.0)], _TARGET_SCHEMA
+    )
+    expected = merge_dataframes(
+        spark.createDataFrame(_TARGET_ROWS, _TARGET_SCHEMA),
+        source,
+        ["k"],
+        **merge_kwargs,
+    ).collect()
+    apply(name, source)
+    got = spark.table(name).collect()
+    assert sorted(got, key=repr) == sorted(expected, key=repr)
+    stages = [t.name for t in spark.catalog.listTables() if "__stage_" in t.name]
+    assert not stages, stages
+    spark.sql(f"DROP TABLE {name}")
+    return got
+
+
+def test_table_upsert_all(spark):
+    """J5: update-all / insert-all in place."""
+    got = _check_table_merge(
+        spark, "mt_upsert_all", lambda t, s: upsert_all(t, s, ["k"])
+    )
+    out = {r.k: r for r in got}
+    assert out[2].v == "B" and out[3].v == "c" and out[None].v == "N"
+    assert len(got) == 4
+
+
+def test_table_upsert_mapped(spark):
+    """J6: explicit update/insert column maps in place."""
+    update_set = {"x": F.col("s.x")}
+    insert_values = {"k": F.col("s.k"), "v": F.lit("new"), "x": F.col("s.x")}
+    got = _check_table_merge(
+        spark,
+        "mt_upsert_mapped",
+        lambda t, s: upsert_mapped(t, s, ["k"], update_set, insert_values),
+        update_set=update_set,
+        insert_values=insert_values,
+    )
+    out = {r.k: r for r in got}
+    assert out[2].v == "b" and out[2].x == 99.0  # only x updated
+    assert out[3].v == "new"  # insert map applied
+
+
+def test_table_insert_only(spark):
+    """J7: insert-only append-dedupe in place; existing rows never change."""
+    got = _check_table_merge(
+        spark,
+        "mt_insert_only",
+        lambda t, s: insert_only(t, s, ["k"]),
+        insert_only=True,
+    )
+    out = {r.k: r for r in got if r.k is not None}
+    assert out == {1: (1, "a", 10.0), 2: (2, "b", 20.0), 3: (3, "c", 30.0)}

@@ -25,7 +25,8 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F  # noqa: E402
 
 from mergermetrics_lakehouse_pipeline_spark.session import get_spark  # noqa: E402
-from mergermetrics_lakehouse_pipeline_spark.sources import delta_log as dl  # noqa: E402
+import mergermetrics_lakehouse_pipeline_spark.sources.delta_log as dl  # noqa: E402
+from tools.replicate import replicate  # noqa: E402
 
 
 def _rss_mb() -> float:
@@ -63,10 +64,7 @@ def main() -> None:
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
     span = li.agg(F.max("l_orderkey")).first()[0] + 1
-    rep = None
-    for i in range(k):
-        r = li.withColumn("l_orderkey", F.col("l_orderkey") + F.lit(i * span))
-        rep = r if rep is None else rep.unionByName(r)
+    rep = replicate(li, k, ["l_orderkey"], offset=span)
 
     # 1x: delete 10% of keys; kx: delete k*10% of replica 0's key space
     # (keys are dense, so matched rows scale exactly by k; hash

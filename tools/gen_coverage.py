@@ -15,7 +15,7 @@ MANUAL = {
     "S3": "sources/catalog.py write_table(mode=overwrite); tests/test_catalog_ddl.py",
     "S4": "sources/catalog.py write_table(mode=append); tests/test_catalog_ddl.py",
     "S5": "sources/catalog.py write_table(merge_schema=True); tests/test_catalog_ddl.py",
-    "S6": "sources/catalog.py write_table(enable_cdf) — Delta-only property, no-op on parquet",
+    "S6": "sources/delta_log.py write_delta(configuration={delta.enableChangeDataFeed: true}); tests/test_delta_features.py",
     "S7": "registry.T / spark.table throughout; tests/test_partitioned_incremental.py",
     "S8": "session.py ensure_medallion_schemas; tests/test_catalog_ddl.py",
     "S9": "sources/catalog.py create_view + plans/star.py; tests/test_catalog_ddl.py",
@@ -145,7 +145,7 @@ EXTRAS = [
      "eligible — tests/test_catalog_ddl.py)"),
     ("Row-level DML (DELETE/UPDATE, lakehouse completeness)",
      "`dml_roundtrip` (operators/dml.py delete_where/update_where pure "
-     "transforms + Delta-native-or-staged-rewrite table appliers; SQL NULL "
+     "transforms + staged-rewrite table appliers; SQL NULL "
      "semantics pinned in tests/test_dml.py; oracle applies the same DML "
      "declaratively to the pristine table)"),
     ("Sink/DDL round-trips (driver-checkable side effects)",

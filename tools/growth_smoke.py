@@ -38,36 +38,9 @@ from mergermetrics_lakehouse_pipeline_spark.operators.similarity import (  # noq
     ivf_assign,
 )
 from mergermetrics_lakehouse_pipeline_spark.session import get_spark  # noqa: E402
+from tools.replicate import replicate, shift_dimension, suffix_words  # noqa: E402
 
-
-def replicate_docs(d: DataFrame, k: int) -> DataFrame:
-    out = None
-    for i in range(k):
-        r = d.withColumn(
-            "doc_id", F.col("doc_id") + F.lit(i * 10_000_000)
-        ).withColumn("text", F.regexp_replace("text", r"(\w+)", f"$1x{i}"))
-        out = r if out is None else out.unionByName(r)
-    return out
-
-
-def replicate_embeddings(e: DataFrame, k: int, dim: int = 64) -> DataFrame:
-    """K disjoint clouds: replica i shifts dimension (i mod dim) by +8 —
-    far apart in cosine space, so a centroid budget scaled with n keeps
-    per-cell occupancy constant (the IVF contract at scale)."""
-    out = None
-    for i in range(k):
-        r = e.withColumn(
-            "vec_id", F.col("vec_id") + F.lit(i * 10_000_000)
-        ).withColumn(
-            "embedding",
-            F.transform(
-                "embedding",
-                lambda x, j: x
-                + F.when(j == F.lit(i % dim), F.lit(8.0)).otherwise(F.lit(0.0)),
-            ),
-        )
-        out = r if out is None else out.unionByName(r)
-    return out
+N = 10_000_000  # per-copy key offset
 
 
 def stride_centroids(e: DataFrame, k: int):
@@ -93,7 +66,8 @@ def minhash_pair_growth(spark, sf_dir: str, k: int) -> dict:
         "doc_id", "text"
     )
     out = {}
-    for label, frame in (("1x", d), (f"{k}x", replicate_docs(d, k))):
+    dk = replicate(d, k, ["doc_id"], extra=suffix_words, offset=N)
+    for label, frame in (("1x", d), (f"{k}x", dk)):
         t0 = time.time()
         out[label] = {
             "n_docs": frame.count(),
@@ -117,7 +91,8 @@ def ivf_pair_growth(spark, sf_dir: str, k: int) -> dict:
     )
     out = {}
     per_cell_target = 25
-    for label, frame in (("1x", e), (f"{k}x", replicate_embeddings(e, k))):
+    ek = replicate(e, k, ["vec_id"], extra=shift_dimension, offset=N)
+    for label, frame in (("1x", e), (f"{k}x", ek)):
         n = frame.count()
         cents = stride_centroids(frame, max(4, n // per_cell_target))
         t0 = time.time()

@@ -31,46 +31,9 @@ from mergermetrics_lakehouse_pipeline_spark.operators.rangejoin import (  # noqa
     bin_interval_join,
 )
 from mergermetrics_lakehouse_pipeline_spark.session import get_spark  # noqa: E402
+from tools.replicate import jitter_value, replicate, suffix_words  # noqa: E402
 
-
-def replicate_events(e: DataFrame, k: int) -> DataFrame:
-    out = None
-    n = 10_000_000
-    for i in range(k):
-        r = (
-            e.withColumn("event_id", F.col("event_id") + F.lit(i * n))
-            # disjoint user populations per replica: k independent
-            # workloads, so per-user join matches scale by k, not k^2
-            .withColumn("user_id", F.col("user_id") + F.lit(i * n))
-            .withColumn("value", F.col("value") + F.lit(i * 1e-7))
-        )
-        out = r if out is None else out.unionByName(r)
-    return out
-
-
-def replicate_docs(d: DataFrame, k: int) -> DataFrame:
-    out = None
-    for i in range(k):
-        r = d.withColumn(
-            "doc_id", F.col("doc_id") + F.lit(i * 10_000_000)
-        ).withColumn("text", F.regexp_replace("text", r"(\w+)", f"$1x{i}"))
-        out = r if out is None else out.unionByName(r)
-    return out
-
-
-def replicate_lineitem(li: DataFrame, k: int) -> DataFrame:
-    """Disjoint replicas (offset order AND part keys): k independent
-    co-purchase graphs, so triangle structure scales by k — replicating
-    only orders would multiply per-part degrees and densify the graph
-    superlinearly by construction."""
-    out = None
-    n = 10_000_000
-    for i in range(k):
-        r = li.withColumn("l_orderkey", F.col("l_orderkey") + F.lit(i * n)).withColumn(
-            "l_partkey", F.col("l_partkey") + F.lit(i * n)
-        )
-        out = r if out is None else out.unionByName(r)
-    return out
+N = 10_000_000  # per-copy key offset
 
 
 def range_join_count(e: DataFrame) -> int:
@@ -103,8 +66,10 @@ def main() -> None:
     spark = get_spark("scale-smoke")
     e1 = registry.events_table(spark, sf_dir).cache()
     d1 = registry.T(spark, sf_dir, "documents").cache()
-    ek = replicate_events(e1, k).cache()
-    dk = replicate_docs(d1, k).cache()
+    # disjoint user populations per copy: k independent workloads, so
+    # per-user join matches scale by k, not k^2
+    ek = replicate(e1, k, ["event_id", "user_id"], extra=jitter_value, offset=N).cache()
+    dk = replicate(d1, k, ["doc_id"], extra=suffix_words, offset=N).cache()
     e1.count(), d1.count(), ek.count(), dk.count()  # materialize caches
 
     cases = {
@@ -137,7 +102,11 @@ def main() -> None:
     from mergermetrics_lakehouse_pipeline_spark.operators import graph as gr
 
     li1 = registry.T(spark, sf_dir, "lineitem").cache()
-    lik = replicate_lineitem(li1, k).cache()
+    # disjoint copies (offset order AND part keys): k independent
+    # co-purchase graphs, so triangle structure scales by k — offsetting
+    # only orders would multiply per-part degrees and densify the graph
+    # superlinearly by construction
+    lik = replicate(li1, k, ["l_orderkey", "l_partkey"], offset=N).cache()
     li1.count(), lik.count()
 
     def triangles(df):
@@ -203,8 +172,8 @@ def main() -> None:
     # fixed batch = replica 0's every-10th doc (dk contains replica 0
     # verbatim-with-x0-suffix, so the batch's true collision partners —
     # its replica-0 index mates — exist identically in both index sizes)
-    c1 = replicate_docs(d1, 1).cache()
-    is_batch = (F.col("doc_id") % 10 == 0) & (F.col("doc_id") < 10_000_000)
+    c1 = replicate(d1, 1, ["doc_id"], extra=suffix_words, offset=N).cache()
+    is_batch = (F.col("doc_id") % 10 == 0) & (F.col("doc_id") < N)
     batch = c1.filter(is_batch).cache()
     batch.count(), c1.count()
 
@@ -312,15 +281,8 @@ def main() -> None:
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
-    def replicate_emb(e: DataFrame, kk: int) -> DataFrame:
-        out = None
-        for i in range(kk):
-            # offset ids; nudge one dimension so replicas aren't identical
-            r = e.withColumn("vec_id", F.col("vec_id") + F.lit(i * 10_000_000))
-            out = r if out is None else out.unionByName(r)
-        return out
-
-    e1, ek = emb, replicate_emb(emb, k)
+    # ids offset only: each copy's vectors coincide with the original's
+    e1, ek = emb, replicate(emb, k, ["vec_id"], offset=N)
 
     def semdedup(df: DataFrame) -> int:
         cents = df.filter(F.col("vec_id") < 8).select(

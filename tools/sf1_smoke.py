@@ -40,26 +40,16 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-from pyspark.sql import DataFrame, functions as F  # noqa: E402
+from pyspark.sql import DataFrame  # noqa: E402
 
 from mergermetrics_lakehouse_pipeline_spark import registry  # noqa: E402
 from mergermetrics_lakehouse_pipeline_spark.session import get_spark  # noqa: E402
-
-OFF = 100_000_000  # per-replica key offset, far above any sf1 key
-
-
-def _replicate(
-    df: DataFrame, k: int, key_cols: list[str], extra=None
-) -> DataFrame:
-    out = None
-    for i in range(k):
-        r = df
-        for c in key_cols:
-            r = r.withColumn(c, F.col(c) + F.lit(i * OFF))
-        if extra is not None:
-            r = extra(r, i)
-        out = r if out is None else out.unionByName(r)
-    return out
+from tools.replicate import (  # noqa: E402
+    jitter_value,
+    replicate,
+    shift_dimension,
+    suffix_words,
+)
 
 
 def build_sf1(spark, sf_dir: str, k: int, out_dir: str) -> None:
@@ -72,16 +62,16 @@ def build_sf1(spark, sf_dir: str, k: int, out_dir: str) -> None:
     for name in ("region", "nation"):
         write(name, T(spark, sf_dir, name))
 
-    write("customer", _replicate(T(spark, sf_dir, "customer"), k, ["c_custkey"]))
-    write("supplier", _replicate(T(spark, sf_dir, "supplier"), k, ["s_suppkey"]))
-    write("part", _replicate(T(spark, sf_dir, "part"), k, ["p_partkey"]))
+    write("customer", replicate(T(spark, sf_dir, "customer"), k, ["c_custkey"]))
+    write("supplier", replicate(T(spark, sf_dir, "supplier"), k, ["s_suppkey"]))
+    write("part", replicate(T(spark, sf_dir, "part"), k, ["p_partkey"]))
     write(
         "orders",
-        _replicate(T(spark, sf_dir, "orders"), k, ["o_orderkey", "o_custkey"]),
+        replicate(T(spark, sf_dir, "orders"), k, ["o_orderkey", "o_custkey"]),
     )
     write(
         "lineitem",
-        _replicate(
+        replicate(
             T(spark, sf_dir, "lineitem"),
             k,
             ["l_orderkey", "l_partkey", "l_suppkey"],
@@ -89,42 +79,20 @@ def build_sf1(spark, sf_dir: str, k: int, out_dir: str) -> None:
     )
     write(
         "events",
-        _replicate(
+        replicate(
             registry.events_table(spark, sf_dir),
             k,
             ["event_id", "user_id"],
-            extra=lambda r, i: r.withColumn(
-                "value", F.col("value") + F.lit(i * 1e-7)
-            ),
+            extra=jitter_value,
         ),
     )
     write(
         "documents",
-        _replicate(
-            T(spark, sf_dir, "documents"),
-            k,
-            ["doc_id"],
-            extra=lambda r, i: r.withColumn(
-                "text", F.regexp_replace("text", r"(\w+)", f"$1x{i}")
-            ),
-        ),
-    )
-
-    dim_expr = (
-        "transform(embedding, (v, j) -> CASE WHEN j = {i} % size(embedding) "
-        "THEN v + 8.0 ELSE v END)"
+        replicate(T(spark, sf_dir, "documents"), k, ["doc_id"], extra=suffix_words),
     )
     write(
         "embeddings",
-        _replicate(
-            T(spark, sf_dir, "embeddings"),
-            k,
-            ["vec_id"],
-            extra=lambda r, i: r.withColumn(
-                "embedding",
-                F.expr(dim_expr.format(i=i)).cast("array<float>"),
-            ),
-        ),
+        replicate(T(spark, sf_dir, "embeddings"), k, ["vec_id"], extra=shift_dimension),
     )
 
 
