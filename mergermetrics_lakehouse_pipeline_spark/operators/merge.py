@@ -81,7 +81,12 @@ def merge_dataframes(
     tgt_cols = target.columns
 
     if insert_only:
-        new_rows = source.join(target.select(*keys), list(keys), "left_anti")
+        # NULL keys match NULL keys, as in J5/J6 — a NULL-keyed source
+        # row already in the target is not inserted again on a re-run
+        t_keys = target.select(*keys)
+        new_rows = source.join(
+            t_keys, _key_condition(t_keys, source, keys), "left_anti"
+        )
         if insert_values:
             new_rows = new_rows.select(
                 *[insert_values.get(c, F.col(c)).alias(c) for c in tgt_cols]

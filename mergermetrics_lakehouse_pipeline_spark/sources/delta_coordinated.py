@@ -66,6 +66,7 @@ from .delta_log import (
     _commit_file,
     _CommitGuard,
     _explicit_features,
+    _latest_action,
     _parse_log_file,
     _scan_files,
     _stage_write,
@@ -162,9 +163,7 @@ def _staged_dir(table_path: str) -> str:
 def _table_id(table_path: str) -> str:
     """The table's immutable metaData.id — the coordinator key (a real
     catalog keys tables by id, never by path). Spark-free probe."""
-    from .delta_pysource import _latest_metadata
-
-    tid = _latest_metadata(table_path).get("id")
+    tid = (_latest_action(table_path, "metaData") or {}).get("id")
     if not tid:
         raise DeltaProtocolError(f"no metaData.id in the log at {table_path}")
     return tid
@@ -605,30 +604,7 @@ def _require_catalog_owned(table_path: str) -> None:
     would silently side-create catalog state for it — the converse
     split-brain direction the round-11 review closed for reads/writes
     (review round 13: truncate/compact had bypassed that gate)."""
-    from .delta_pysource import _log_files_desc, _scan_log
-
-    proto: dict[str, Any] | None = None
-    scanned = _scan_log(table_path)
-    checkpoints = scanned[1]
-    for _v, path in _log_files_desc(table_path, scanned):
-        for action in _parse_log_file(path):
-            if "protocol" in action:
-                proto = action["protocol"]
-                break
-        if proto:
-            break
-    if proto is None and checkpoints:
-        import pyarrow.parquet as pq
-
-        for part in checkpoints[max(checkpoints)]:
-            t = pq.read_table(part)
-            if "protocol" in t.column_names:
-                for p in t.column("protocol").to_pylist():
-                    if p and p.get("minReaderVersion") is not None:
-                        proto = p
-                        break
-            if proto:
-                break
+    proto = _latest_action(table_path, "protocol")
     if proto is None:
         raise DeltaProtocolError(
             f"no protocol action found under {table_path}"

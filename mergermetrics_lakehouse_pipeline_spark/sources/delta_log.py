@@ -64,6 +64,7 @@ and consuming cdc files where it is not (copy-on-write DELETE/UPDATE).
 from __future__ import annotations
 
 import contextvars
+import functools
 import json
 import os
 import shutil
@@ -312,6 +313,12 @@ class DeltaProtocolError(RuntimeError):
     """Table requires reader features this implementation doesn't have."""
 
 
+class MissingCommitError(DeltaProtocolError, FileNotFoundError):
+    """A commit JSON that replay needs is gone and nothing (checkpoint,
+    log compaction) stands in for it — the log was truncated past its
+    last usable checkpoint."""
+
+
 class ConcurrentModificationError(DeltaProtocolError):
     """A concurrent commit conflicts with this transaction's read/write
     set — the transaction must be re-run from a fresh snapshot."""
@@ -430,14 +437,6 @@ def _list_versions(table_path: str) -> tuple[list[int], dict[int, list[str]]]:
     return commits, checkpoints
 
 
-def _list_compactions(table_path: str) -> dict[int, list[tuple[int, str]]]:
-    """Minor LOG COMPACTION files (see _scan_log): a reader may replay
-    one in place of the individual commit JSONs in its inclusive range —
-    this engine does so whenever a commit JSON is missing (snapshot(),
-    the Python DataSource planner)."""
-    return _scan_log(table_path)[2]
-
-
 def _parse_log_file(path: str) -> list[dict[str, Any]]:
     """Actions of one JSON-lines log file (commit or compaction)."""
     with open(path, encoding="utf-8") as fh:
@@ -448,13 +447,10 @@ def _protection_version(table_path: str) -> int:
     """``delta.requireCheckpointProtectionBeforeVersion`` from the
     NEWEST metaData action (0 when unset): consulted by the cleanup
     commands (truncate_log, compact_log) and by replay before a
-    compaction substitutes for missing commits. Spark-free (newest
-    commit/compaction walk with checkpoint-parquet fallback) so the
+    compaction substitutes for missing commits. Spark-free, so the
     driver-only cleanup commands stay Spark-free."""
-    from .delta_pysource import _latest_metadata
-
     try:
-        md = _latest_metadata(table_path)
+        md = _latest_action(table_path, "metaData") or {}
     except (DeltaProtocolError, OSError):
         return 0
     return int((md.get("configuration") or {}).get(_CP_PROP, 0) or 0)
@@ -635,6 +631,34 @@ def _checkpoint_actions(table, col: str):
             yield a
 
 
+def _latest_action(table_path: str, kind: str) -> dict[str, Any] | None:
+    """The newest ``kind`` action ("metaData" or "protocol") without a
+    SparkSession or a full replay: commit JSONs and minor log
+    compactions walked newest first (a compaction positioned at its END
+    version, commits preferred on ties), then the newest checkpoint's
+    parquet (pyarrow) for logs truncated past every commit carrying
+    one. The version-ordered walk matters: a compaction covering
+    deleted commits may hold a NEWER action than any surviving commit
+    JSON, and returning the newest surviving commit's action would
+    silently read stale table state. One directory listing. None when
+    no action of that kind is found."""
+    commits, checkpoints, compactions = _scan_log(table_path)
+    entries = [(v, 1, _commit_file(table_path, v)) for v in commits] + [
+        (e, 0, p) for lst in compactions.values() for (e, p) in lst
+    ]
+    for _v, _pref, path in sorted(entries, reverse=True):
+        for action in _parse_log_file(path):
+            if kind in action:
+                return action[kind]
+    if checkpoints:
+        import pyarrow.parquet as pq
+
+        for part in checkpoints[max(checkpoints)]:
+            for a in _checkpoint_actions(pq.read_table(part), kind):
+                return a
+    return None
+
+
 def _read_checkpoint(snap: DeltaSnapshot, ckpt_files: list[str]) -> None:
     """Fold a checkpoint (one action per row, struct columns
     add/remove/metaData/protocol; one or many parquet parts) into the
@@ -678,7 +702,10 @@ def _read_checkpoint(snap: DeltaSnapshot, ckpt_files: list[str]) -> None:
 def snapshot(
     spark: SparkSession, table_path: str, version: int | None = None
 ) -> DeltaSnapshot:
-    """Reconstruct the table state at ``version`` (default: latest)."""
+    """Reconstruct the table state at ``version`` (default: latest):
+    the newest usable checkpoint plus the commits after it. The only
+    log replay in the engine; pure driver-side metadata work (``spark``
+    is unused), so the Python DataSource planner calls it with None."""
     commits, checkpoints, compactions = _scan_log(table_path)
     compaction_ends = [e for lst in compactions.values() for (e, _p) in lst]
     if not commits and not checkpoints and not compaction_ends:
@@ -739,14 +766,11 @@ def snapshot(
             if v in checkpoints:  # state already folded in
                 v += 1
                 continue
-            raise FileNotFoundError(
+            raise MissingCommitError(
                 f"missing commit {v} (log truncated past last checkpoint?)"
             )
-        with open(path, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    _apply_action(snap, json.loads(line))
+        for action in _parse_log_file(path):
+            _apply_action(snap, action)
         v += 1
     if not snap.schema.fields:
         raise DeltaProtocolError("no metaData action found in log")
@@ -1467,7 +1491,7 @@ def _commit_info_ts_ict(
     path = _commit_file(table_path, version)
     if not os.path.exists(path):
         if compactions is None:  # callers in loops pass the scan once
-            compactions = _list_compactions(table_path)
+            compactions = _scan_log(table_path)[2]
         ends = [
             (e, p)
             for lst in compactions.values()
@@ -5622,6 +5646,61 @@ def _contiguous_commits(
     return wanted
 
 
+#: operations whose remove+add commits replace whole files: every
+#: removed file is entirely deleted (minus its already-DV-deleted rows)
+#: and every added file entirely inserted — derivable without cdc files
+_OVERWRITE_OPS = ("WRITE", "CREATE OR REPLACE TABLE AS SELECT")
+
+
+def _classify_commit(
+    table_path: str, v: int, *, cdf: bool = False
+) -> list[tuple[dict[str, Any], str | None]]:
+    """What commit ``v`` changed, as (action payload, change type) pairs
+    — the one rule every commit replayer (stream_commit_batches,
+    read_cdf / stream_cdf_batches, the delta_pylog source) applies.
+
+    Append mode (``cdf=False``): the dataChange adds, change type None;
+    OPTIMIZE commits (dataChange: false) yield nothing, and any
+    dataChange remove raises — a copy-on-write DML's rewritten files
+    hold surviving rows, which are not fresh appends.
+
+    CDF mode, per the protocol's change-data-feed reader rules: the
+    commit's cdc files when present (change type "cdc": the rows carry
+    their own _change_type); otherwise removes are "delete" and adds
+    "insert", which is exact only for pure appends, pure file removals
+    and whole-file overwrites (_OVERWRITE_OPS) — any other commit that
+    both removes and adds without cdc files is underdetermined and
+    raises."""
+    cdc, adds, removes = [], [], []
+    op = ""
+    for action in _parse_commit(table_path, v):
+        if "cdc" in action:
+            cdc.append(action["cdc"])
+        elif "add" in action and action["add"].get("dataChange", True):
+            adds.append(action["add"])
+        elif "remove" in action and action["remove"].get("dataChange", True):
+            removes.append(action["remove"])
+        elif "commitInfo" in action:
+            op = str(action["commitInfo"].get("operation", ""))
+    if not cdf:
+        if removes:
+            raise DeltaProtocolError(
+                f"commit {v} removes data (update/delete/overwrite); an "
+                "append-only stream cannot represent it — consume its "
+                "changes instead (stream_cdf_batches, delta_pylog mode=cdf)"
+            )
+        return [(a, None) for a in adds]
+    if cdc:
+        return [(a, "cdc") for a in cdc]
+    if removes and adds and op.upper() not in _OVERWRITE_OPS:
+        raise DeltaProtocolError(
+            f"commit {v} ({op or 'unknown op'}) rewrote rows without "
+            "cdc files — enable delta.enableChangeDataFeed at table "
+            "creation to capture DML changes"
+        )
+    return [(a, "delete") for a in removes] + [(a, "insert") for a in adds]
+
+
 def stream_commit_batches(
     spark: SparkSession, table_path: str, *, from_version: int = 0
 ):
@@ -5642,16 +5721,7 @@ def stream_commit_batches(
     """
     snap = snapshot(spark, table_path)
     for v in _contiguous_commits(table_path, from_version, None):
-        adds = []
-        for action in _parse_commit(table_path, v):
-            if "add" in action and action["add"].get("dataChange", True):
-                adds.append(unquote(action["add"]["path"]))
-            elif "remove" in action and action["remove"].get("dataChange", True):
-                raise DeltaProtocolError(
-                    f"commit {v} removes data (update/delete/overwrite); the "
-                    "append-only streaming source cannot represent it — "
-                    "consume stream_cdf_batches instead"
-                )
+        adds = [unquote(a["path"]) for a, _ in _classify_commit(table_path, v)]
         if not adds:
             continue
         df = _raw_reader(spark, table_path, snap).parquet(
@@ -5716,38 +5786,19 @@ def _commit_changes(
     because its add files contain surviving non-change rows); otherwise
     derive — pure adds are inserts, full-overwrite removes are full-file
     deletes + adds full-file inserts; a DML commit without cdc files is
-    underdetermined and raises."""
-    cdc_as, add_as, rm_as = [], [], []
-    op = ""
-    for action in _parse_commit(table_path, v):
-        if "cdc" in action:
-            cdc_as.append(action["cdc"])
-        elif "add" in action and action["add"].get("dataChange", True):
-            add_as.append(action["add"])
-        elif "remove" in action and action["remove"].get("dataChange", True):
-            rm_as.append(action["remove"])
-        elif "commitInfo" in action:
-            op = str(action["commitInfo"].get("operation", ""))
-    if cdc_as:
-        return _read_rels(spark, table_path, snap, cdc_as, None, v)
-    if not add_as and not rm_as:
+    underdetermined and raises (see _classify_commit)."""
+    pairs = _classify_commit(table_path, v, cdf=True)
+    frames = []
+    for change in ("cdc", "delete", "insert"):
+        payloads = [a for a, c in pairs if c == change]
+        if payloads:
+            frames.append(_read_rels(
+                spark, table_path, snap, payloads,
+                None if change == "cdc" else change, v,
+            ))
+    if not frames:
         return None  # optimize / checkpoint-only / txn-only commit
-    if rm_as and add_as:
-        if op.upper() not in ("WRITE", "CREATE OR REPLACE TABLE AS SELECT"):
-            raise DeltaProtocolError(
-                f"commit {v} ({op or 'unknown op'}) rewrote rows without "
-                "cdc files — enable delta.enableChangeDataFeed at table "
-                "creation to capture DML changes"
-            )
-        # overwrite: every removed file is entirely deleted (minus its
-        # already-DV-deleted rows), every added file entirely inserted
-        # — derivable without cdc
-        dels = _read_rels(spark, table_path, snap, rm_as, "delete", v)
-        ins = _read_rels(spark, table_path, snap, add_as, "insert", v)
-        return dels.unionByName(ins)
-    if add_as:
-        return _read_rels(spark, table_path, snap, add_as, "insert", v)
-    return _read_rels(spark, table_path, snap, rm_as, "delete", v)
+    return functools.reduce(DataFrame.unionByName, frames)
 
 
 def stream_cdf_batches(

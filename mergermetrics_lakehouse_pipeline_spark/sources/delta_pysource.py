@@ -34,9 +34,13 @@ snapshot through the same partition planner, including deletion-vector
 row subtraction (indices dropped executor-side before the Arrow batch
 is handed to Spark).
 
-Schema discovery is Spark-free: the latest metaData action is parsed
-from the commit JSONs (or the checkpoint parquet via pyarrow), so
-``DataSource.schema()`` works at plan time with no session round trip.
+Planning reads table state only through ``delta_log``, which needs no
+SparkSession: batch reads plan the live files of
+``delta_log.snapshot(None, path)`` (the engine's one log replay),
+streams plan each commit's changes from ``delta_log._classify_commit``
+(the same rule ``stream_commit_batches`` / ``read_cdf`` apply), and
+``DataSource.schema()`` reads the newest metaData and protocol actions
+through ``delta_log._latest_action`` with no session round trip.
 
 Scale: planning is O(files-in-commit) driver metadata; all row work is
 executor-side Arrow decoding. For maximum JVM-native throughput the
@@ -67,14 +71,16 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from .delta_log import (
-    CDF_DIR,
     DeltaProtocolError,
-    _commit_file,
+    _check_protocol,
+    _check_type_changes,
+    _classify_commit,
+    _latest_action,
     _list_versions,
     _may_intersect,
-    _parse_commit,
-    _parse_log_file,
-    _scan_log,
+    _parse_literal,
+    _schema_has_variant,
+    snapshot,
     version_at_timestamp,
 )
 from urllib.parse import unquote
@@ -87,50 +93,6 @@ FORMAT_NAME = "delta_pylog"
 # --------------------------------------------------------------------------
 
 
-def _log_files_desc(
-    table_path: str,
-    scanned: tuple | None = None,
-) -> list[tuple[int, str]]:
-    """(version, path) of every commit JSON plus every minor log
-    compaction (positioned at its END version — its table-level actions
-    are the latest in range), newest first, commits preferred on ties.
-    The version-ordered walk matters: a compaction covering deleted
-    commits may hold a NEWER metaData/protocol than any surviving
-    commit JSON, and returning the newest surviving commit's action
-    would silently read stale table state (the r9 sidecar bug class).
-    Pass ``scanned`` (a prior ``_scan_log`` result) to reuse ONE
-    directory listing per caller (r10 advice: _latest_metadata and
-    _check_reader_protocol were each paying two LIST round-trips)."""
-    commits, _ckpts, compactions = scanned or _scan_log(table_path)
-    entries = [(v, 1, _commit_file(table_path, v)) for v in commits] + [
-        (e, 0, p) for lst in compactions.values() for (e, p) in lst
-    ]
-    entries.sort(reverse=True)
-    return [(v, p) for v, _pref, p in entries]
-
-
-def _latest_metadata(table_path: str) -> dict[str, Any]:
-    """The newest metaData action, parsed without a SparkSession:
-    commit JSONs and log compactions scanned newest-first, checkpoint
-    parquet (pyarrow) as fallback for truncated logs."""
-    scanned = _scan_log(table_path)  # ONE listing for files + ckpts
-    checkpoints = scanned[1]
-    for _v, path in _log_files_desc(table_path, scanned):
-        for action in _parse_log_file(path):
-            if "metaData" in action:
-                return action["metaData"]
-    if checkpoints:
-        import pyarrow.parquet as pq
-
-        for part in checkpoints[max(checkpoints)]:
-            t = pq.read_table(part)
-            if "metaData" in t.column_names:
-                for md in t.column("metaData").to_pylist():
-                    if md and md.get("schemaString"):
-                        return md
-    raise DeltaProtocolError(f"no metaData action found under {table_path}")
-
-
 def _table_schema(table_path: str) -> tuple[StructType, list[str]]:
     """Logical schema + partition columns. Column-mapped tables
     (name/id mode) are supported (round 7): each StructField carries its
@@ -138,17 +100,23 @@ def _table_schema(table_path: str) -> tuple[StructType, list[str]]:
     executors inside the schema itself — _read_partition resolves file
     columns physically (by parquet field id first, then physical name)
     and re-emits them under logical names."""
-    md = _latest_metadata(table_path)
+    md = _latest_action(table_path, "metaData")
+    if md is None:
+        raise DeltaProtocolError(
+            f"no metaData action found under {table_path}"
+        )
     conf = dict(md.get("configuration") or {})
     mode = conf.get("delta.columnMapping.mode", "none")
     if mode not in ("none", "name", "id"):
         raise DeltaProtocolError(
             f"column mapping mode {mode!r} not supported (none/name/id)"
         )
-    _check_reader_protocol(table_path)
+    # unsupported reader features raise instead of silently misreading;
+    # after truncate_log the protocol may survive only in the checkpoint
+    protocol = _latest_action(table_path, "protocol")
+    if protocol is not None:
+        _check_protocol(protocol)
     schema = StructType.fromJson(json.loads(md["schemaString"]))
-    from .delta_log import _check_type_changes, _schema_has_variant
-
     _check_type_changes(schema)  # gate unsupported foreign widenings
     if _schema_has_variant(schema):
         # this container's pyarrow cannot open parquet footers carrying
@@ -161,34 +129,6 @@ def _table_schema(table_path: str) -> tuple[StructType, list[str]]:
             "type); use the JVM scan (read_delta)"
         )
     return schema, list(md.get("partitionColumns") or [])
-
-
-def _check_reader_protocol(table_path: str) -> None:
-    """Replay protocol actions so unsupported reader features raise
-    instead of silently misreading (same gate as delta_log). After
-    ``truncate_log`` the protocol action may survive ONLY in the
-    checkpoint parquet, so it is consulted when no commit JSON carries
-    one — otherwise a table requiring unsupported v3 features would be
-    silently misread (ADVICE r6 #2)."""
-    from .delta_log import _check_protocol
-
-    scanned = _scan_log(table_path)  # ONE listing for files + ckpts
-    checkpoints = scanned[1]
-    for _v, path in _log_files_desc(table_path, scanned):
-        for action in _parse_log_file(path):
-            if "protocol" in action:
-                _check_protocol(action["protocol"])
-                return
-    if checkpoints:
-        import pyarrow.parquet as pq
-
-        for part in checkpoints[max(checkpoints)]:
-            t = pq.read_table(part)
-            if "protocol" in t.column_names:
-                for p in t.column("protocol").to_pylist():
-                    if p and p.get("minReaderVersion") is not None:
-                        _check_protocol(p)
-                        return
 
 
 # --------------------------------------------------------------------------
@@ -224,26 +164,18 @@ class _DeltaFilePartition(InputPartition):
 
 
 def _mapping_mode(table_path: str) -> str:
-    conf = dict(_latest_metadata(table_path).get("configuration") or {})
+    md = _latest_action(table_path, "metaData") or {}
+    conf = dict(md.get("configuration") or {})
     return conf.get("delta.columnMapping.mode", "none")
 
 
 def _commit_partitions(
     table_path: str, v: int, *, cdf: bool, strict_ids: bool = False
 ) -> list[_DeltaFilePartition]:
-    cdc, adds, removes = [], [], []
-    op = ""
-    for action in _parse_commit(table_path, v):
-        if "cdc" in action:
-            cdc.append(action["cdc"])
-        elif "add" in action and action["add"].get("dataChange", True):
-            adds.append(action["add"])
-        elif "remove" in action and action["remove"].get("dataChange", True):
-            removes.append(action["remove"])
-        elif "commitInfo" in action:
-            op = str(action["commitInfo"].get("operation", ""))
-
-    def part(a: dict, change: str | None) -> _DeltaFilePartition:
+    """Input partitions of commit ``v``: one per file that
+    ``_classify_commit`` names, tagged with its change type."""
+    out = []
+    for a, change in _classify_commit(table_path, v, cdf=cdf):
         rel = unquote(a["path"])
         pv = dict(a.get("partitionValues") or {})
         if not pv:
@@ -254,32 +186,11 @@ def _commit_partitions(
                 if "=" in seg:
                     k, val = seg.split("=", 1)
                     pv[k] = unquote(val)
-        return _DeltaFilePartition(
+        out.append(_DeltaFilePartition(
             table_path, rel, pv, v, change, a.get("deletionVector"),
             strict_ids=strict_ids,
-        )
-
-    if not cdf:
-        if removes:
-            raise DeltaProtocolError(
-                f"commit {v} removes data; the append-only stream cannot "
-                "represent it — use mode=cdf"
-            )
-        return [part(a, None) for a in adds]
-    if cdc:
-        return [part(a, "cdc") for a in cdc]
-    if removes and adds:
-        if op.upper() != "WRITE":
-            raise DeltaProtocolError(
-                f"commit {v} ({op or 'unknown op'}) rewrote rows without "
-                "cdc files — enable delta.enableChangeDataFeed"
-            )
-        return [part(a, "delete") for a in removes] + [
-            part(a, "insert") for a in adds
-        ]
-    if adds:
-        return [part(a, "insert") for a in adds]
-    return [part(a, "delete") for a in removes]
+        ))
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -386,8 +297,6 @@ def _read_partition(
             # not NULL — the literal rides inside the field metadata,
             # so this fill is Spark-free (delta_log._parse_literal is
             # pure python)
-            from .delta_log import _parse_literal
-
             val = _parse_literal(str(fmd["EXISTS_DEFAULT"]), f.dataType)
             arrays.append(pa.array([val] * n, type=at))
         else:
@@ -448,105 +357,12 @@ def _snapshot_partitions(
     bounds: dict[str, list[Any]] | None = None,
     strict_ids: bool = False,
 ) -> list[_DeltaFilePartition]:
-    """Current live files, reconstructed Spark-free (checkpoint via
-    pyarrow + JSON replay) — the batch-read planner. ``bounds``
-    (from pushed filters) stats-prunes: a file whose footer min/max or
-    partition value provably cannot intersect every bound is never
-    planned, the same data-skipping read_delta_pruned applies."""
-    commits, checkpoints, compactions = _scan_log(table_path)
-    files: dict[str, dict] = {}
-    start = 0
-    if checkpoints:
-        import pyarrow.parquet as pq
-
-        ckpt_v = max(checkpoints)
-        # a V2 checkpoint's file actions live in SIDECAR parquet under
-        # _delta_log/_sidecars/ — the named file is only a manifest;
-        # reading it alone would silently plan an empty table
-        action_files = list(checkpoints[ckpt_v])
-        sidecars: list[str] = []
-        for part in checkpoints[ckpt_v]:
-            t = pq.read_table(part)
-            if "sidecar" in t.column_names:
-                log_dir = os.path.dirname(part)
-                for sc in t.column("sidecar").to_pylist():
-                    if sc and sc.get("path"):
-                        sidecars.append(
-                            os.path.join(log_dir, "_sidecars", sc["path"])
-                        )
-        missing = [p for p in sidecars if not os.path.exists(p)]
-        if missing:
-            raise DeltaProtocolError(
-                f"v2 checkpoint references missing sidecars {missing}"
-            )
-        action_files.extend(sidecars)
-        for part in action_files:
-            t = pq.read_table(part)
-            for col, key in (("add", "path"), ("remove", "path")):
-                if col not in t.column_names:
-                    continue
-                for a in t.column(col).to_pylist():
-                    if not a or not a.get(key):
-                        continue
-                    if col == "add":
-                        files[unquote(a["path"])] = a
-                    else:
-                        files.pop(unquote(a["path"]), None)
-        start = ckpt_v + 1
-    ends = [e for lst in compactions.values() for (e, _p) in lst]
-    target = max(commits + ends, default=start - 1)
-
-    def _fold(action: dict) -> None:
-        if "add" in action:
-            files[unquote(action["add"]["path"])] = action["add"]
-        elif "remove" in action:
-            files.pop(unquote(action["remove"]["path"]), None)
-
-    checkpoint_versions = set(checkpoints)
-    ckpt_used = max(checkpoint_versions) if checkpoints else None
-    prot_v: int | None = None  # lazy: only read when a commit is missing
-    v = start
-    while v <= target:
-        if not os.path.exists(_commit_file(table_path, v)):
-            # a minor log compaction COVERING v (its range may start
-            # below v — re-applying reconciled actions is last-wins
-            # safe) replays in place of deleted commit JSONs; an
-            # uncovered gap raises, matching snapshot() — skipping it
-            # would silently plan stale state (the r9 sidecar class).
-            # checkpointProtection: a compaction straddling a PROTECTED
-            # resume checkpoint is ignored, matching snapshot()
-            if prot_v is None:
-                from .delta_log import _protection_version
-
-                prot_v = _protection_version(table_path)
-            fits = [
-                (e, p)
-                for s, lst in compactions.items()
-                if s <= v
-                and not (
-                    ckpt_used is not None
-                    and ckpt_used < prot_v
-                    and s <= ckpt_used
-                )
-                for (e, p) in lst
-                if v <= e <= target
-            ]
-            if fits:
-                end, cpath = max(fits)
-                for action in _parse_log_file(cpath):
-                    _fold(action)
-                v = end + 1
-                continue
-            if v in checkpoint_versions:  # state already folded in
-                v += 1
-                continue
-            raise DeltaProtocolError(
-                f"missing commit {v} (log truncated past last "
-                "checkpoint?) — refusing to plan a partial snapshot"
-            )
-        for action in _parse_commit(table_path, v):
-            _fold(action)
-        v += 1
+    """Current live files — the batch-read planner, over the replay
+    ``delta_log.snapshot`` does (Spark-free, so it runs in the planning
+    Python worker). ``bounds`` (from pushed filters) stats-prunes: a
+    file whose footer min/max or partition value provably cannot
+    intersect every bound is never planned, the same data-skipping
+    read_delta_pruned applies."""
     return [
         _DeltaFilePartition(
             table_path,
@@ -557,7 +373,7 @@ def _snapshot_partitions(
             a.get("deletionVector"),
             strict_ids=strict_ids,
         )
-        for rel, a in files.items()
+        for rel, a in snapshot(None, table_path).files.items()
         if not bounds
         or all(
             _may_intersect(a, col, lo, hi)

@@ -480,3 +480,59 @@ def test_pysource_id_mode_file_without_ids_raises(spark, tbl):
     out = spark.read.format("delta_pylog").option("path", tbl).load()
     with pytest.raises(Exception, match="field ids"):
         out.collect()
+
+
+def test_foreign_replace_commit_classified_once(spark, tbl, tmp_path):
+    """A whole-table replace as delta-spark logs it (operation CREATE OR
+    REPLACE TABLE AS SELECT; full-file removes and adds, no cdc files)
+    yields the same derived delete and insert rows from read_cdf,
+    stream_cdf_batches and the delta_pylog CDF stream — all three apply
+    one commit classifier."""
+    import json as js
+
+    from mergermetrics_lakehouse_pipeline_spark.sources.delta_log import (
+        read_cdf,
+        stream_cdf_batches,
+    )
+
+    write_delta(_kv(spark, 40), tbl, mode="overwrite")  # v0
+    write_delta(_kv(spark, 12), tbl, mode="overwrite")  # v1
+    log = os.path.join(tbl, "_delta_log", f"{1:020d}.json")
+    actions = [js.loads(line) for line in open(log) if line.strip()]
+    assert not any("cdc" in a for a in actions)
+    for a in actions:
+        if "commitInfo" in a:
+            a["commitInfo"]["operation"] = "CREATE OR REPLACE TABLE AS SELECT"
+    with open(log, "w") as fh:
+        for a in actions:
+            fh.write(js.dumps(a) + "\n")
+
+    cols = ["k", "v", "_change_type", "_commit_version"]
+
+    def _changes(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    expect = sorted(
+        [(k, k * 10, "insert", 0) for k in range(40)]
+        + [(k, k * 10, "delete", 1) for k in range(40)]
+        + [(k, k * 10, "insert", 1) for k in range(12)]
+    )
+    assert _changes(read_cdf(spark, tbl)) == expect
+    streamed = [
+        row for _v, df in stream_cdf_batches(spark, tbl) for row in _changes(df)
+    ]
+    assert sorted(streamed) == expect
+    q = (
+        spark.readStream.format("delta_pylog")
+        .option("path", tbl)
+        .option("mode", "cdf")
+        .load()
+        .writeStream.format("memory")
+        .queryName("dpys_replace")
+        .option("checkpointLocation", str(tmp_path / "c"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert _changes(spark.table("dpys_replace")) == expect

@@ -143,3 +143,20 @@ def test_table_insert_only(spark):
     )
     out = {r.k: r for r in got if r.k is not None}
     assert out == {1: (1, "a", 10.0), 2: (2, "b", 20.0), 3: (3, "c", 30.0)}
+    # a NULL source key matches the NULL target key (eqNullSafe, as in
+    # J5/J6), so identical re-runs never re-insert the NULL-keyed row
+    assert [r.v for r in got if r.k is None] == ["n"]
+    spark.sql("DROP TABLE IF EXISTS mt_insert_only_rerun")
+    write_table(
+        spark.createDataFrame(_TARGET_ROWS, _TARGET_SCHEMA),
+        "mt_insert_only_rerun",
+    )
+    source = spark.createDataFrame([(None, "N", 5.0)], _TARGET_SCHEMA)
+    for _ in range(3):
+        insert_only("mt_insert_only_rerun", source, ["k"])
+        rows = spark.table("mt_insert_only_rerun").collect()
+        assert sorted(rows, key=repr) == sorted(
+            spark.createDataFrame(_TARGET_ROWS, _TARGET_SCHEMA).collect(),
+            key=repr,
+        )
+    spark.sql("DROP TABLE mt_insert_only_rerun")

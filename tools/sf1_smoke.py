@@ -38,7 +38,13 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too; they inherit PYTHONPATH
+# from the JVM, which takes this process's environment when it starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from pyspark.sql import DataFrame  # noqa: E402
 
@@ -134,7 +140,7 @@ def main() -> None:
     from tools.plan_fingerprints import fingerprint
 
     baseline = {}
-    fp_path = "/root/repo/PLAN_FP.json"
+    fp_path = os.path.join(ROOT, "PLAN_FP.json")
     if os.path.exists(fp_path):
         baseline = json.load(open(fp_path))
 
@@ -181,7 +187,7 @@ def main() -> None:
     # ratio regressed past 1.5x its prior value — the quiet-quadratic
     # creep detector (emb_neardup_pairs drifted 9.9x -> 15.8x between
     # r11 and r12 with nobody forced to look).
-    local_path = "/root/repo/BENCH_LOCAL.json"
+    local_path = os.path.join(ROOT, "BENCH_LOCAL.json")
     sf01: dict[str, float] = {}
     if os.path.exists(local_path):
         local = json.load(open(local_path))
