@@ -42,6 +42,23 @@ conflict matrix delta-spark's OptimisticTransaction applies
 failed transaction's already-written data files are invisible (never
 committed) and reclaimed by ``vacuum_delta``.
 
+Commit authoring: every writer (write_delta, the DML front ends,
+OPTIMIZE, RESTORE, CLONE, ALTER and protocol upgrades) stages its data
+files first and then makes ONE ``_author_commit`` call. The builder owns
+what every commit repeats: the timestamp, add actions laid out by the
+snapshot's physical partition and stats columns, remove actions, row ids
+for fresh adds on a row-tracking table, the ``txn`` action, commitInfo,
+and the hand-off to the put-if-absent ``_commit`` or the caller's
+``commit_fn`` (the catalog coordinator's ratification). A caller keeps
+only what is its own: the operation and its parameters, the files it
+adds and removes, any metaData / protocol change (``_metadata_action``,
+``_rw_feature_protocol``, ``_writer_feature_protocol``) and its conflict
+scope in the ``_CommitGuard`` (removed and read files, predicate,
+partitions, whole-table read, blind append). write_delta itself is three
+steps: ``_prepare_create`` or ``_prepare_existing`` / ``_prepare_replace``
+validate the frame against the table, the files are staged, and the
+builder commits.
+
 Reader compatibility: minReaderVersion 1/2, plus version 3 when
 ``readerFeatures`` is within {columnMapping, deletionVectors,
 timestampNtz}: column mapping in ``name`` mode maps physical parquet
@@ -71,7 +88,7 @@ import shutil
 import time
 import uuid
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 from urllib.parse import quote, unquote
 
@@ -1692,6 +1709,17 @@ def _ict_on(conf: dict[str, str]) -> bool:
     return conf.get(_ICT_PROP, "").lower() == "true"
 
 
+def _rt_on(snap: DeltaSnapshot) -> bool:
+    """Row tracking is on when the table enables the property OR already
+    carries the delta.rowTracking domain — a foreign log may hold either
+    without the other. Fresh adds then get row ids, and row-replacing
+    DML is rejected."""
+    return (
+        _RT_DOMAIN in snap.domain_metadata
+        or snap.configuration.get(_RT_PROP, "").lower() == "true"
+    )
+
+
 def _rt_prev_hwm(snap: DeltaSnapshot) -> int:
     """The delta.rowTracking domain's rowIdHighWaterMark (-1 if the
     domain has never been written)."""
@@ -1706,46 +1734,46 @@ def _rt_prev_hwm(snap: DeltaSnapshot) -> int:
 
 def _stamp_row_tracking(
     table_path: str,
-    actions: list[dict[str, Any]],
+    adds: list[dict[str, Any]],
     prev_hwm: int,
     next_version: int,
-) -> None:
+) -> dict[str, Any]:
     """Reserve a disjoint [baseRowId, baseRowId + numRecords) range per
-    fresh add action and append the domainMetadata action advancing the
-    rowIdHighWaterMark. Adds are visited in list order (the callers
-    build them from _stage_write's path-sorted output, so assignment is
-    reproducible for a given staged set)."""
+    fresh add and return the domainMetadata action advancing the
+    rowIdHighWaterMark. Adds are visited in list order (built from
+    _stage_write's path-sorted output, so assignment is reproducible for
+    a given staged set)."""
     hwm = prev_hwm
-    for a in actions:
-        if "add" not in a:
-            continue
-        n = _add_num_records(table_path, a["add"])
-        a["add"]["baseRowId"] = hwm + 1
-        a["add"]["defaultRowCommitVersion"] = next_version
+    for a in adds:
+        n = _add_num_records(table_path, a)
+        a["baseRowId"] = hwm + 1
+        a["defaultRowCommitVersion"] = next_version
         hwm += n
-    actions.append(
-        {
-            "domainMetadata": {
-                "domain": _RT_DOMAIN,
-                "configuration": json.dumps({"rowIdHighWaterMark": hwm}),
-                "removed": False,
-            }
+    return {
+        "domainMetadata": {
+            "domain": _RT_DOMAIN,
+            "configuration": json.dumps({"rowIdHighWaterMark": hwm}),
+            "removed": False,
         }
-    )
+    }
+
+
+def _num_rows(table_path: str, rel: str) -> int:
+    """Row count from the parquet footer (O(1) metadata read)."""
+    import pyarrow.parquet as pq
+
+    return int(pq.ParquetFile(os.path.join(table_path, rel)).metadata.num_rows)
 
 
 def _add_num_records(table_path: str, add: dict[str, Any]) -> int:
     """Row count of an add action's file — from its stats JSON when
-    present, else the parquet footer (O(1) metadata read). Row tracking
-    needs an exact count per file to reserve id ranges."""
+    present, else the parquet footer. Row tracking needs an exact count
+    per file to reserve id ranges."""
     if add.get("stats"):
         st = json.loads(add["stats"])
         if "numRecords" in st:
             return int(st["numRecords"])
-    import pyarrow.parquet as pq
-
-    full = os.path.join(table_path, unquote(add["path"]))
-    return int(pq.ParquetFile(full).metadata.num_rows)
+    return _num_rows(table_path, unquote(add["path"]))
 
 
 def _remove_action(a: dict[str, Any], now_ms: int, data_change: bool) -> dict:
@@ -1768,85 +1796,529 @@ def _remove_action(a: dict[str, Any], now_ms: int, data_change: bool) -> dict:
     return {"remove": rm}
 
 
-def _schema_json(df: DataFrame) -> str:
-    return df.schema.json()
-
-
-def _finish_overwrite_schema_commit(
-    table_path: str,
-    df: DataFrame,
-    prev: DeltaSnapshot,
-    partition_by: list[str],
-    added: list[str],
-    txn: tuple[str, int] | None,
+def _metadata_action(
+    snap: DeltaSnapshot,
     *,
-    schema_json: str | None = None,
-    configuration: dict[str, str] | None = None,
-    mapping: dict[str, str] | None = None,
-) -> int:
-    """Author the commit for an explicit schema-replacing overwrite:
-    new metaData (schema AND partitioning may change), every previous
-    file removed, staged files added. On a column-mapped table the
-    caller passes the remapped ``schema_json``/``configuration`` and
-    the logical->physical ``mapping`` the staged files were written
-    with."""
-    mapping = mapping or {}
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = [
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema_json or _schema_json(df),
-                "partitionColumns": partition_by,
-                "configuration": (
-                    prev.configuration if configuration is None else configuration
-                ),
-            }
+    schema: StructType | None = None,
+    conf: dict[str, str] | None = None,
+    partition_columns: list[str] | None = None,
+) -> dict[str, Any]:
+    """A metaData action re-stating ``snap``'s table with the given
+    schema / configuration / partitioning. The table id is immutable and
+    re-emitted verbatim (a fresh uuid would read as a table
+    REPLACEMENT); only a snapshot without one gets a fresh id."""
+    return {
+        "metaData": {
+            "id": snap.metadata_id or str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": (snap.schema if schema is None else schema).json(),
+            "partitionColumns": list(
+                snap.partition_columns
+                if partition_columns is None
+                else partition_columns
+            ),
+            "configuration": snap.configuration if conf is None else conf,
         }
-    ]
-    for rel, a in prev.files.items():
-        actions.append(_remove_action(a, now_ms, True))
-    stat_cols = [
-        mapping.get(c, c) for c in _stats_columns(df.schema, partition_by)
-    ]
-    part_store = [mapping.get(c, c) for c in partition_by]
-    for rel in added:
+    }
+
+
+def _with_metadata(snap: DeltaSnapshot, metadata: dict[str, Any]) -> DeltaSnapshot:
+    """``snap`` as it reads once ``metadata`` is applied: the schema,
+    partitioning and physical column names a write lays its files out
+    in. The live files are shared, not copied."""
+    out = replace(snap)
+    _apply_action(out, metadata)
+    return out
+
+
+def _stamp_fields(
+    schema: StructType, stamps: dict[str, dict[str, Any]]
+) -> StructType:
+    """``schema`` with each named field's metadata updated by its stamp;
+    fields not named pass through unchanged."""
+    return StructType(
+        [
+            StructField(
+                f.name, f.dataType, f.nullable,
+                {**(f.metadata or {}), **stamps[f.name]},
+            )
+            if f.name in stamps
+            else f
+            for f in schema.fields
+        ]
+    )
+
+
+def _author_commit(
+    table_path: str,
+    snap: DeltaSnapshot,
+    *,
+    operation: str,
+    params: dict[str, Any],
+    guard: _CommitGuard,
+    adds: list[str | dict[str, Any]] = (),
+    removes: list[dict[str, Any]] = (),
+    metadata: dict[str, Any] | None = None,
+    protocol: dict[str, Any] | None = None,
+    extra: list[dict[str, Any]] = (),
+    txn: tuple[str, int] | None = None,
+    data_change: bool = True,
+    commit_fn=None,
+) -> int:
+    """Build one commit against ``snap`` (the state the transaction
+    read; version -1 for a new table) and hand it to ``commit_fn or
+    _commit``. ``adds`` holds table-relative paths of freshly staged
+    files, which become add actions laid out by ``snap``'s physical
+    partition and stats columns, or add payloads kept as they are
+    (restore, clone and deletion-vector re-adds). ``removes`` holds the
+    add payloads of files leaving the table; ``data_change`` flags both
+    the fresh adds and the removes. The builder owns what every commit
+    repeats: the timestamp, row ids for fresh adds on a row-tracking
+    table (plus the high-water-mark domain and the guard's domain and
+    commit-version stamping), the ``txn`` action and the guard's appId,
+    ``createdTime`` on a creating metaData, ``commitInfo`` and the
+    guard's metadata and in-commit-timestamp flags. ``guard`` arrives
+    holding only the caller's conflict scope."""
+    now_ms = int(time.time() * 1000)
+    actions: list[dict[str, Any]] = [{"protocol": protocol}] if protocol else []
+    if metadata is not None:
+        if snap.version < 0:
+            metadata["metaData"]["createdTime"] = now_ms
+        actions.append(metadata)
+    actions += [_remove_action(a, now_ms, data_change) for a in removes]
+    pcols, stat_cols = _phys_partition_cols(snap), _phys_stat_cols(snap)
+    fresh = []
+    for a in adds:
+        if isinstance(a, str):
+            a = _add_action(table_path, a, pcols, stat_cols, now_ms, data_change)
+            fresh.append(a["add"])
+        else:
+            a = {"add": a}
+        actions.append(a)
+    actions += extra
+    if fresh and _rt_on(snap):
+        # fresh rows get disjoint id ranges above the mark, which this
+        # commit advances — ids of replaced rows are never reused
         actions.append(
-            _add_action(table_path, rel, part_store, stat_cols, now_ms)
+            _stamp_row_tracking(
+                table_path, fresh, _rt_prev_hwm(snap), snap.version + 1
+            )
         )
-    conf_now = prev.configuration if configuration is None else configuration
-    rt_enabled = conf_now.get(_RT_PROP, "").lower() == "true"
-    if rt_enabled:
-        _stamp_row_tracking(
-            table_path, actions, _rt_prev_hwm(prev), prev.version + 1
-        )
+        guard.domains = frozenset({_RT_DOMAIN})
+        guard.stamp_row_commit_version = True
     if txn is not None:
         actions.append(
             {"txn": {"appId": txn[0], "version": int(txn[1]), "lastUpdated": now_ms}}
         )
+        guard.txn_app = txn[0]
     actions.append(
         {
             "commitInfo": {
                 "timestamp": now_ms,
-                "operation": "WRITE",
-                "operationParameters": {
-                    "mode": "OVERWRITE",
-                    "overwriteSchema": "true",
-                },
+                "operation": operation,
+                "operationParameters": params,
             }
         }
     )
-    guard = _CommitGuard(
-        read_whole_table=True,
-        removed=set(prev.files),
-        read_files=set(prev.files),
-        has_metadata=True,
-        domains=frozenset({_RT_DOMAIN}) if rt_enabled else frozenset(),
-        stamp_row_commit_version=rt_enabled,
-        ict=_ict_on(conf_now),
+    guard.has_metadata = metadata is not None or protocol is not None
+    guard.ict = _ict_on(snap.configuration)
+    return (commit_fn or _commit)(table_path, actions, guard, snap.version)
+
+
+@dataclass
+class _PreparedWrite:
+    """A write_delta frame validated against its table: the frame to
+    stage, the table state its files are laid out for (``snap`` — the
+    new table at version -1 on creation) and the log actions the commit
+    carries besides adds and removes."""
+
+    df: DataFrame
+    snap: DeltaSnapshot
+    metadata: dict[str, Any] | None = None
+    protocol: dict[str, Any] | None = None
+    extra: list[dict[str, Any]] = field(default_factory=list)
+    #: identity-assignment frames to release once the files are staged
+    unpersist: list[DataFrame] = field(default_factory=list)
+
+
+def _create_protocol(
+    conf: dict[str, str],
+    schema: StructType,
+    *,
+    generated: bool,
+    identity: bool,
+    cluster_by: bool,
+    column_defaults: bool,
+) -> dict[str, Any]:
+    """The protocol action of a new table: the lowest legacy
+    reader/writer versions its declarations need, or reader/writer 7
+    table features for capabilities that exist only as features."""
+    if conf.get(_CDF_PROP, "").lower() == "true":
+        writer_v = 4
+    elif any(k.startswith(_CONSTRAINT_PREFIX) for k in conf):
+        writer_v = 3
+    else:
+        writer_v = 2
+    if generated:
+        writer_v = max(writer_v, 4)  # generated columns = writer v4
+    reader_v = 1
+    if conf.get(_CM_MODE, "none") != "none":
+        # legacy column-mapping protocol: reader 2 / writer 5 (writer
+        # versions are cumulative, so CDF/constraints stay covered)
+        reader_v, writer_v = 2, max(writer_v, 5)
+    if identity:
+        writer_v = max(writer_v, 6)  # identity columns = writer v6
+    v7_feats: set[str] = set()
+    if conf.get(_RT_PROP, "").lower() == "true":
+        v7_feats |= {"rowTracking", "domainMetadata"}
+    if _ict_on(conf):
+        v7_feats |= {"inCommitTimestamp"}
+    if cluster_by:
+        v7_feats |= {"clusteredTable", "domainMetadata"}
+    if conf.get(_TW_PROP, "").lower() == "true":
+        v7_feats |= {"typeWidening"}
+    if column_defaults:
+        v7_feats |= {_CD_FEATURE}  # writer-only: reads unaffected
+    if _schema_has_variant(schema):
+        # VARIANT columns: reader-writer feature — files carry the
+        # parquet VARIANT logical type, so readers must understand the
+        # binary encoding (reader 3 + readerFeatures)
+        v7_feats |= {"variantType"}
+    if not v7_feats:
+        return {"minReaderVersion": reader_v, "minWriterVersion": writer_v}
+    # these capabilities exist only as writer-v7 table features;
+    # re-state everything the legacy writer version implied. The reader
+    # version stays legacy — none of them asks anything of readers —
+    # EXCEPT the reader-writer features typeWidening (pre-widen files
+    # keep the narrow physical type) and variantType
+    proto: dict[str, Any] = {
+        "minReaderVersion": reader_v,
+        "minWriterVersion": 7,
+        "writerFeatures": sorted(_implied_writer_features(writer_v) | v7_feats),
+    }
+    rw_feats = v7_feats & {"typeWidening", "variantType"}
+    if rw_feats:
+        if reader_v >= 2:  # column mapping was implied at r2
+            rw_feats |= {"columnMapping"}
+        proto["minReaderVersion"] = 3
+        proto["readerFeatures"] = sorted(rw_feats)
+    return proto
+
+
+def _prepare_create(
+    df: DataFrame,
+    partition_by: list[str],
+    *,
+    configuration: dict[str, str] | None,
+    generated: dict[str, str] | None,
+    identity: dict[str, dict[str, Any]] | None,
+    cluster_by: list[str] | None,
+    column_defaults: dict[str, str] | None,
+) -> _PreparedWrite:
+    """A new table's first write: validate the declarations, compute
+    generated and identity columns, stamp every declaration into field
+    metadata, and derive the protocol."""
+    conf = dict(configuration or {})
+    if conf.get(_RT_PROP, "").lower() == "true":
+        # reserve the materialized row-id column names up front so
+        # OPTIMIZE can preserve ids through compaction (the spec stores
+        # the names in table config to avoid colliding with user columns)
+        conf.setdefault(_RT_MAT_ID, f"_row-id-col-{uuid.uuid4().hex[:12]}")
+        conf.setdefault(_RT_MAT_CV, f"_row-commit-col-{uuid.uuid4().hex[:12]}")
+    extra: list[dict[str, Any]] = []
+    if cluster_by:
+        if partition_by:
+            raise DeltaProtocolError(
+                "cluster_by and partition_by are mutually exclusive "
+                "(clustering replaces hive partitioning)"
+            )
+        missing_cc = sorted(set(cluster_by) - set(df.columns))
+        if missing_cc:
+            raise DeltaProtocolError(
+                f"clustering columns {missing_cc} not in the frame"
+            )
+        extra.append(
+            {
+                "domainMetadata": {
+                    "domain": _CLUSTER_DOMAIN,
+                    "configuration": json.dumps(
+                        {"clusteringColumns": [[c] for c in cluster_by]}
+                    ),
+                    "removed": False,
+                }
+            }
+        )
+    if generated:
+        df = _apply_generated(df, generated)  # compute or enforce
+    hwm: dict[str, int] = {}
+    unpersist: list[DataFrame] = []
+    if identity:
+        bad = sorted(set(identity) & set(generated or {}))
+        if bad:
+            raise DeltaProtocolError(
+                f"columns {bad} cannot be both generated and identity"
+            )
+        from pyspark.sql.types import LongType
+
+        df, hwm, unpersist = _apply_identity(
+            df,
+            {
+                col: {
+                    "start": int(d.get("start", 1)),
+                    "step": int(d.get("step", 1)),
+                    "hwm": None,
+                    "allow": bool(d.get("allow_explicit", False)),
+                    "type": LongType(),
+                }
+                for col, d in identity.items()
+            },
+        )
+    cm_mode = conf.get(_CM_MODE, "none")
+    schema = df.schema
+    if cm_mode in ("name", "id"):
+        schema = StructType(
+            [_mapped_field(f, i + 1) for i, f in enumerate(schema.fields)]
+        )
+        conf[_CM_MAXID] = str(len(schema.fields))
+    elif cm_mode != "none":
+        raise DeltaProtocolError(
+            f"column mapping mode {cm_mode!r} not supported "
+            "(none/name/id only)"
+        )
+    # every declaration lands in field metadata — the protocol's
+    # declaration, honored by every later write. (An identity name absent
+    # from the frame is the NORMAL omitted-column case — _apply_identity
+    # has already added it — so a typo'd name cannot be guarded here.)
+    stamps: dict[str, dict[str, Any]] = {
+        c: {_GEN_EXPR: e} for c, e in (generated or {}).items()
+    }
+    for c, d in (identity or {}).items():
+        stamps[c] = {
+            _ID_START: int(d.get("start", 1)),
+            _ID_STEP: int(d.get("step", 1)),
+            _ID_ALLOW: bool(d.get("allow_explicit", False)),
+            **({_ID_HWM: int(hwm[c])} if c in hwm else {}),
+        }
+    if column_defaults:
+        # Spark's CURRENT_DEFAULT key, honored by every later write that
+        # omits the column; validated NOW (constant-foldable, castable),
+        # not at the first omitting write
+        bad = sorted(set(column_defaults) & set(stamps))
+        if bad:
+            raise DeltaProtocolError(
+                f"columns {bad} cannot carry a DEFAULT and a "
+                "generation/identity declaration"
+            )
+        missing_cd = sorted(set(column_defaults) - set(df.columns))
+        if missing_cd:
+            raise DeltaProtocolError(
+                f"DEFAULT declared for unknown columns {missing_cd}"
+            )
+        types = {f.name: f.dataType for f in schema.fields}
+        for c, d_sql in column_defaults.items():
+            _eval_default(df.sparkSession, c, d_sql, types[c])
+            stamps[c] = {_CD_CURRENT: d_sql}
+    schema = _stamp_fields(schema, stamps)
+    if identity:
+        # identity columns never hold NULL
+        schema = StructType(
+            [
+                StructField(f.name, f.dataType, False, f.metadata)
+                if f.name in identity else f
+                for f in schema.fields
+            ]
+        )
+    _enforce_constraints(df, conf)
+    new = DeltaSnapshot(version=-1, schema=StructType([]), partition_columns=[])
+    metadata = _metadata_action(
+        new, schema=schema, conf=conf, partition_columns=partition_by
     )
-    return _commit(table_path, actions, guard, prev.version)
+    protocol = _create_protocol(
+        conf, schema, generated=bool(generated), identity=bool(identity),
+        cluster_by=bool(cluster_by), column_defaults=bool(column_defaults),
+    )
+    return _PreparedWrite(
+        df, _with_metadata(new, metadata), metadata, protocol, extra, unpersist
+    )
+
+
+def _prepare_replace(
+    df: DataFrame, prev: DeltaSnapshot, partition_by: list[str]
+) -> _PreparedWrite:
+    """Delta's .option("overwriteSchema", "true"): an explicit full
+    replacement of schema AND partitioning — the one sanctioned way to
+    drop or retype columns. The replaced table gets a fresh table id."""
+    if _identity_specs(prev.schema):
+        # a frame cannot re-declare identity start/step/hwm; silently
+        # dropping the declaration (or carrying it onto a retyped
+        # column) would corrupt assignment — re-create the table
+        raise DeltaProtocolError(
+            "overwrite_schema on a table with identity columns "
+            "is not supported; re-create the table"
+        )
+    # constraints are table properties and survive the schema
+    # replacement — the new rows must satisfy them (a constraint
+    # referencing a dropped column fails loudly here; drop the
+    # constraint first, as on real Delta)
+    _enforce_constraints(df, prev.configuration)
+    conf = dict(prev.configuration)
+    schema = df.schema
+    if prev.column_mapping_mode != "none":
+        # same-named columns KEEP their (id, physicalName) — a replace is
+        # not a rename; brand-new columns get fresh ids past maxColumnId
+        old = {f.name: f for f in prev.schema.fields}
+        next_id = int(conf.get(_CM_MAXID, "0"))
+        fields = []
+        for f in df.schema.fields:
+            if f.name in old:
+                md = dict(old[f.name].metadata)
+                fields.append(StructField(f.name, f.dataType, f.nullable, md))
+            else:
+                next_id += 1
+                fields.append(_mapped_field(f, next_id))
+        conf[_CM_MAXID] = str(next_id)
+        schema = StructType(fields)
+    metadata = _metadata_action(
+        replace(prev, metadata_id=None),
+        schema=schema, conf=conf, partition_columns=partition_by,
+    )
+    return _PreparedWrite(df, _with_metadata(prev, metadata), metadata)
+
+
+def _prepare_existing(
+    df: DataFrame, prev: DeltaSnapshot, mode: str, partition_by: list[str]
+) -> _PreparedWrite:
+    """A write into an existing table: compute generated, identity and
+    default columns the frame omits, then evolve the schema by the
+    frame's new and widened columns (mergeSchema) under the table's
+    column mapping. A commit that changes the schema re-states
+    metaData, and upgrades the protocol when the change needs a
+    reader-writer feature the table lacks."""
+    ptypes = {f.name: f.dataType for f in prev.schema.fields}
+    # generated (writer v4), identity (writer v6) and DEFAULT (writer-v7
+    # allowColumnDefaults) columns a frame omits are filled BEFORE the
+    # schema checks, so the omission is not misread as dropping them
+    gen = _generated_exprs(prev.schema)
+    if gen:
+        # compute when omitted, enforce when supplied; computed values
+        # cast to the declared field type
+        computed = [c for c in gen if c not in df.columns]
+        df = _apply_generated(df, gen)
+        for c in computed:
+            if c in ptypes:
+                df = df.withColumn(c, F.col(c).cast(ptypes[c]))
+    id_specs = _identity_specs(prev.schema)
+    hwm: dict[str, int] = {}
+    unpersist: list[DataFrame] = []
+    if id_specs:
+        # assign above the high-water mark when omitted, reject/track
+        # explicit values
+        df, hwm, unpersist = _apply_identity(df, id_specs)
+    for c, d_sql in _column_defaults(prev.schema).items():
+        if c not in df.columns:  # a supplied column wins
+            df = df.withColumn(c, F.expr(d_sql).cast(ptypes[c]))
+    # partitioning is a TABLE property, not a per-write choice: a
+    # conflicting spec is rejected — including partitioning a previously
+    # unpartitioned table (ADVICE r5 #2: files would land in hive dirs
+    # while metaData keeps partitionColumns=[], corrupting the scan)
+    if partition_by and partition_by != prev.partition_columns:
+        raise DeltaProtocolError(
+            f"table is partitioned by {prev.partition_columns}; "
+            f"cannot write with partition_by={partition_by}"
+        )
+    # mergeSchema-style evolution: new frame columns widen the schema;
+    # dropping or retyping columns needs an explicit schema overwrite.
+    # Type widening (delta.enableTypeWidening set at creation): a frame
+    # column of a spec-sanctioned WIDER type widens the TABLE (recorded
+    # in the field's delta.typeChanges; existing files keep their narrow
+    # physical type and upcast at read — see _raw_reader), a NARROWER
+    # frame column upcasts to the table type before staging
+    new_types = {f.name: f.dataType for f in df.schema.fields}
+    tw_enabled = prev.configuration.get(_TW_PROP, "").lower() == "true"
+    widen: dict[str, tuple[DataType, DataType]] = {}
+    for name, dt in ptypes.items():
+        new_dt = new_types.get(name)
+        if new_dt is None or new_dt == dt:
+            continue
+        ok = tw_enabled and name not in id_specs and name not in gen
+        if ok and _is_widening(dt, new_dt):
+            widen[name] = (dt, new_dt)
+        elif ok and _is_widening(new_dt, dt):
+            df = df.withColumn(name, F.col(name).cast(dt))
+        else:
+            raise DeltaProtocolError(
+                f"column {name!r} type change {dt} -> {new_dt} "
+                "needs an explicit schema overwrite (or, for widening, "
+                f"a table created with {_TW_PROP}=true)"
+            )
+    missing = sorted(set(ptypes) - set(new_types))
+    if missing:
+        raise DeltaProtocolError(
+            f"{mode} is missing existing columns {missing}; Delta writes "
+            "may add columns (mergeSchema) but dropping needs an "
+            "explicit schema overwrite"
+        )
+    conf = dict(prev.configuration)
+    schema = prev.schema
+    added = [f for f in df.schema.fields if f.name not in ptypes]
+    if added:
+        if prev.column_mapping_mode != "none":
+            # evolved columns join the mapping with fresh sequential ids
+            # past maxColumnId and fresh physical names
+            next_id = int(conf.get(_CM_MAXID, "0"))
+            added = [_mapped_field(f, next_id + i) for i, f in enumerate(added, 1)]
+            conf[_CM_MAXID] = str(next_id + len(added))
+        by_name = {f.name: f for f in list(prev.schema.fields) + added}
+        # append keeps the table's column order; overwrite the frame's
+        order = (
+            list(ptypes) + [f.name for f in added]
+            if mode == "append"
+            else df.columns
+        )
+        schema = StructType([by_name[c] for c in order])
+    if widen:
+        old_md = {f.name: f.metadata or {} for f in schema.fields}
+        schema = _stamp_fields(
+            StructType(
+                [
+                    StructField(f.name, widen[f.name][1], f.nullable, f.metadata)
+                    if f.name in widen else f
+                    for f in schema.fields
+                ]
+            ),
+            {
+                c: {
+                    _TW_KEY: list(old_md[c].get(_TW_KEY) or [])
+                    + [{"fromType": o.typeName(), "toType": n.typeName()}]
+                }
+                for c, (o, n) in widen.items()
+            },
+        )
+    _enforce_constraints(df, prev.configuration)
+    if hwm:
+        # an assigning write re-commits metaData with the advanced mark
+        schema = _stamp_fields(schema, {c: {_ID_HWM: int(v)} for c, v in hwm.items()})
+    if not (added or widen or hwm):
+        return _PreparedWrite(df, prev, unpersist=unpersist)
+    prev_feats = set(
+        prev.protocol.get("writerFeatures") or []
+    ) | _implied_writer_features(int(prev.protocol.get("minWriterVersion", 2)))
+    upgrade: set[str] = set()
+    if widen and "typeWidening" not in prev_feats:
+        # a widen on a table whose protocol predates the feature
+        # (foreign table carrying the property)
+        upgrade |= {"typeWidening"}
+    if (
+        _schema_has_variant(schema)
+        and not _schema_has_variant(prev.schema)
+        and "variantType" not in prev_feats
+    ):
+        upgrade |= {"variantType"}  # the table's first VARIANT column
+    metadata = _metadata_action(prev, schema=schema, conf=conf)
+    return _PreparedWrite(
+        df, _with_metadata(prev, metadata), metadata,
+        _rw_feature_protocol(prev, upgrade), unpersist=unpersist,
+    )
 
 
 def write_delta(
@@ -1918,640 +2390,67 @@ def write_delta(
     domainMetadata): each staged add action is stamped with a
     ``baseRowId``/``defaultRowCommitVersion`` and the commit advances
     the ``delta.rowTracking`` domain's rowIdHighWaterMark; read the
-    assigned ids back with read_delta_row_ids. File-rewriting DML
-    (copy-on-write DELETE/UPDATE, MERGE, OPTIMIZE) is rejected on
-    row-tracking tables — preserving ids through rewrites requires
-    materialized row-id columns (documented out of scope); the DV
-    merge-on-read path (delete_delta_dv) keeps ids exact and is the
-    sanctioned delete.
+    assigned ids back with read_delta_row_ids. Row-replacing DML
+    (copy-on-write DELETE/UPDATE, updating MERGE) is rejected on
+    row-tracking tables; the DV merge-on-read path (delete_delta_dv)
+    keeps ids exact and is the sanctioned delete, OPTIMIZE materializes
+    ids into the compacted files, and insert-only MERGE appends rows
+    with fresh ids.
     """
     partition_by = list(partition_by or [])
-    spark = df.sparkSession
     os.makedirs(_log_path(table_path), exist_ok=True)
-    commits, checkpoints, compactions = _scan_log(table_path)
-    # a log whose only surviving artifacts are compaction files is an
-    # EXISTING table (snapshot() reads it) — treating it as brand-new
-    # would re-create it over its own history
-    compaction_ends = {
-        e for lst in compactions.values() for (e, _p) in lst
-    }
-    known_versions = set(commits) | set(checkpoints) | compaction_ends
-    base_version = max(known_versions) if known_versions else -1
-
-    prev_files: dict[str, dict] = {}
-    evolved_schema: StructType | None = None
-    prev_configuration: dict[str, str] = {}
-    evolved_configuration: dict[str, str] = {}
-    #: columns this write WIDENS (type-widening evolution)
-    widen_cols: dict[str, tuple[DataType, DataType]] = {}
-    #: identity-column assignment state for this write
-    id_hwm_updates: dict[str, int] = {}
-    id_unpersist: list[DataFrame] = []
-    #: row tracking: prior rowIdHighWaterMark (-1 on a fresh table)
-    rt_prev_hwm = -1
-    #: logical -> physical column name for the files THIS write stages
-    #: (identity unless the table uses column mapping)
-    mapping: dict[str, str] = {}
-    #: logical -> parquet field id, id-mode tables only (footers must
-    #: carry field ids so readers resolve by id)
-    ids_map: dict[str, int] | None = None
-    if base_version >= 0:
-        if configuration is not None:
-            raise DeltaProtocolError(
-                "table configuration is set at creation; ALTER is not a "
-                "write-path concern"
-            )
-        if generated is not None:
-            raise DeltaProtocolError(
-                "generated columns are declared at table creation"
-            )
-        if identity is not None:
-            raise DeltaProtocolError(
-                "identity columns are declared at table creation"
-            )
-        if cluster_by is not None:
-            raise DeltaProtocolError(
-                "clustering columns are declared at table creation"
-            )
-        prev = snapshot(spark, table_path)
-        base_version = prev.version
-        prev_configuration = prev.configuration
-        mapping = dict(prev.physical_names)
-        ids_map = _ids_if_id_mode(prev)
-        rt_prev_hwm = _rt_prev_hwm(prev)
+    # a log whose only surviving artifacts are checkpoints or compaction
+    # files is an EXISTING table (snapshot() reads it) — treating it as
+    # brand-new would re-create it over its own history
+    if not any(_scan_log(table_path)):
+        w = _prepare_create(
+            df, partition_by, configuration=configuration,
+            generated=generated, identity=identity, cluster_by=cluster_by,
+            column_defaults=column_defaults,
+        )
+    else:
+        for arg, why in (
+            (configuration, "table configuration is set at creation; "
+             "ALTER is not a write-path concern"),
+            (generated, "generated columns are declared at table creation"),
+            (identity, "identity columns are declared at table creation"),
+            (cluster_by, "clustering columns are declared at table creation"),
+        ):
+            if arg is not None:
+                raise DeltaProtocolError(why)
+        prev = snapshot(df.sparkSession, table_path)
         if mode == "overwrite":
             _reject_if_append_only(prev, "overwrite")
-        if overwrite_schema:
-            # Delta's .option("overwriteSchema", "true"): an explicit
-            # full replacement of schema AND partitioning — the one
-            # sanctioned way to drop/retype columns. Only meaningful
-            # with a full overwrite (append would corrupt old files).
-            if mode != "overwrite":
-                raise DeltaProtocolError(
-                    "overwrite_schema requires mode='overwrite'"
-                )
-            if _identity_specs(prev.schema):
-                # a frame cannot re-declare identity start/step/hwm;
-                # silently dropping the declaration (or carrying it
-                # onto a retyped column) would corrupt assignment —
-                # re-create the table to change identity columns
-                raise DeltaProtocolError(
-                    "overwrite_schema on a table with identity columns "
-                    "is not supported; re-create the table"
-                )
-            # constraints are table properties and survive the schema
-            # replacement — the new rows must satisfy them (a constraint
-            # referencing a dropped column fails loudly here; drop the
-            # constraint first, as on real Delta)
-            _enforce_constraints(df, prev_configuration)
-            new_conf = dict(prev_configuration)
-            if prev.column_mapping_mode != "none":
-                # same-named columns KEEP their (id, physicalName) —
-                # a replace is not a rename; brand-new columns get
-                # fresh ids past maxColumnId
-                prev_by_name = {f.name: f for f in prev.schema.fields}
-                next_id = int(new_conf.get(_CM_MAXID, "0"))
-                fields = []
-                for f in df.schema.fields:
-                    if f.name in prev_by_name:
-                        old = prev_by_name[f.name]
-                        fields.append(
-                            StructField(
-                                f.name, f.dataType, f.nullable, dict(old.metadata)
-                            )
-                        )
-                    else:
-                        next_id += 1
-                        fields.append(_mapped_field(f, next_id))
-                new_conf[_CM_MAXID] = str(next_id)
-                store_schema = StructType(fields)
-                mapping = {
-                    f.name: f.metadata[_CM_PHYS] for f in fields
-                }
-                if prev.column_mapping_mode == "id":
-                    ids_map = {
-                        f.name: int(f.metadata[_CM_ID]) for f in fields
-                    }
-            else:
-                store_schema = df.schema
-            added = _stage_write(
-                _to_physical(df, mapping, ids_map),
-                table_path,
-                [mapping.get(c, c) for c in partition_by],
-            )
-            return _finish_overwrite_schema_commit(
-                table_path, df, prev, partition_by, added, txn,
-                schema_json=store_schema.json(),
-                configuration=new_conf,
-                mapping=mapping,
-            )
-        # generated columns (writer v4): compute when omitted, enforce
-        # when supplied — BEFORE the schema checks, so a frame omitting
-        # a generated column is not misread as dropping it; computed
-        # values cast to the declared field type
-        gen = _generated_exprs(prev.schema)
-        if gen:
-            computed = [c for c in gen if c not in df.columns]
-            df = _apply_generated(df, gen)
-            prev_types = {f.name: f.dataType for f in prev.schema.fields}
-            for c in computed:
-                if c in prev_types:
-                    df = df.withColumn(c, F.col(c).cast(prev_types[c]))
-        # identity columns (writer v6): assign above the high-water mark
-        # when omitted, reject/track explicit values — BEFORE the schema
-        # checks, so an omitting frame is not misread as dropping the
-        # column
-        id_specs = _identity_specs(prev.schema)
-        if id_specs:
-            df, id_hwm_updates, id_unpersist = _apply_identity(df, id_specs)
-        # column DEFAULT values (writer-v7 allowColumnDefaults): a frame
-        # that OMITS a defaulted column gets CURRENT_DEFAULT evaluated
-        # and filled — BEFORE the schema checks, so the omission is not
-        # misread as dropping the column (delta-spark's
-        # ResolveDefaultColumns INSERT behavior; a supplied column wins)
-        defaults = _column_defaults(prev.schema)
-        if defaults:
-            ptypes = {f.name: f.dataType for f in prev.schema.fields}
-            for c, d_sql in defaults.items():
-                if c not in df.columns:
-                    df = df.withColumn(c, F.expr(d_sql).cast(ptypes[c]))
-        # partitioning is a TABLE property, not a per-write choice:
-        # inherit it when the caller omits partition_by, reject ANY
-        # conflicting spec — including partitioning a previously
-        # unpartitioned table (ADVICE r5 #2: files would land in hive
-        # dirs while metaData keeps partitionColumns=[], corrupting
-        # the scan)
-        if not partition_by:
-            partition_by = list(prev.partition_columns)
-        elif partition_by != prev.partition_columns:
-            raise DeltaProtocolError(
-                f"table is partitioned by {prev.partition_columns}; "
-                f"cannot write with partition_by={partition_by}"
-            )
-        if mode == "overwrite":
-            prev_files = prev.files
-        # mergeSchema-style evolution (S5 over the real format): an
-        # append/overwrite whose frame adds columns re-commits metaData
-        # with the widened schema; dropping or retyping columns is
-        # rejected (Delta requires explicit overwriteSchema for that).
-        old_fields = {f.name: f.dataType for f in prev.schema.fields}
-        new_fields = {f.name: f.dataType for f in df.schema.fields}
-        # type widening (reader-writer feature typeWidening): with
-        # delta.enableTypeWidening set at creation, a frame whose column
-        # is a spec-sanctioned WIDER type widens the TABLE (recorded in
-        # the field's delta.typeChanges metadata; existing files keep
-        # their narrow physical type and upcast at read — see
-        # _raw_reader); a NARROWER frame column upcasts to the table
-        # type before staging. Anything else still rejects.
-        tw_enabled = prev_configuration.get(_TW_PROP, "").lower() == "true"
-        upcast_cols: dict[str, DataType] = {}
-        for name, dt in old_fields.items():
-            if name not in new_fields or new_fields[name] == dt:
-                continue
-            protected = name in _identity_specs(prev.schema) or name in (
-                _generated_exprs(prev.schema)
-            )
-            if tw_enabled and not protected and _is_widening(
-                dt, new_fields[name]
-            ):
-                widen_cols[name] = (dt, new_fields[name])
-            elif tw_enabled and not protected and _is_widening(
-                new_fields[name], dt
-            ):
-                upcast_cols[name] = dt
-            else:
-                raise DeltaProtocolError(
-                    f"column {name!r} type change {dt} -> {new_fields[name]} "
-                    "needs an explicit schema overwrite (or, for widening, "
-                    f"a table created with {_TW_PROP}=true)"
-                )
-        for name, dt in upcast_cols.items():
-            df = df.withColumn(name, F.col(name).cast(dt))
-        if set(old_fields) - set(new_fields):
-            raise DeltaProtocolError(
-                f"{mode} is missing existing columns "
-                f"{sorted(set(old_fields) - set(new_fields))}; Delta writes "
-                "may add columns (mergeSchema) but dropping needs an "
-                "explicit schema overwrite"
-            )
-        added_cols = [f for f in df.schema.fields if f.name not in old_fields]
-        if added_cols:
-            evolved_configuration = dict(prev_configuration)
-            if prev.column_mapping_mode != "none":
-                # evolved columns join the mapping: fresh sequential ids
-                # past maxColumnId, fresh physical names; existing
-                # columns KEEP their StructField metadata
-                next_id = int(evolved_configuration.get(_CM_MAXID, "0"))
-                new_by_name: dict[str, StructField] = {}
-                for f in added_cols:
-                    next_id += 1
-                    new_by_name[f.name] = _mapped_field(f, next_id)
-                evolved_configuration[_CM_MAXID] = str(next_id)
-                mapping.update(
-                    {f.name: f.metadata[_CM_PHYS] for f in new_by_name.values()}
-                )
-                if ids_map is not None:
-                    ids_map.update(
-                        {
-                            f.name: int(f.metadata[_CM_ID])
-                            for f in new_by_name.values()
-                        }
-                    )
-            else:
-                new_by_name = {f.name: f for f in added_cols}
-            prev_by_name = {f.name: f for f in prev.schema.fields}
-            if mode == "append":
-                ordered = list(prev.schema.fields) + [
-                    new_by_name[f.name] for f in added_cols
-                ]
-            else:  # overwrite keeps the incoming frame's column order
-                ordered = [
-                    prev_by_name.get(f.name) or new_by_name[f.name]
-                    for f in df.schema.fields
-                ]
-            evolved_schema = StructType(ordered)
-        if widen_cols:
-            stamped_fields = []
-            for f in (evolved_schema or prev.schema).fields:
-                if f.name in widen_cols:
-                    old_dt, new_dt = widen_cols[f.name]
-                    md = dict(f.metadata or {})
-                    changes = list(md.get(_TW_KEY) or [])
-                    changes.append(
-                        {
-                            "fromType": old_dt.typeName(),
-                            "toType": new_dt.typeName(),
-                        }
-                    )
-                    md[_TW_KEY] = changes
-                    stamped_fields.append(
-                        StructField(f.name, new_dt, f.nullable, md)
-                    )
-                else:
-                    stamped_fields.append(f)
-            evolved_schema = StructType(stamped_fields)
-            if not evolved_configuration:
-                evolved_configuration = dict(prev_configuration)
-
-    create_conf: dict[str, str] = {}
-    create_schema: StructType | None = None
-    if base_version >= 0:
-        _enforce_constraints(df, prev_configuration)
-        if id_hwm_updates:
-            # an assigning write re-commits metaData with the advanced
-            # high-water mark (rides the evolution commit when one is
-            # already due)
-            evolved_schema = _patch_identity_hwm(
-                evolved_schema or prev.schema, id_hwm_updates
-            )
-            if not evolved_configuration:
-                evolved_configuration = dict(prev_configuration)
-    else:
-        create_conf = dict(configuration or {})
-        if create_conf.get(_RT_PROP, "").lower() == "true":
-            # reserve the materialized row-id column names up front so
-            # OPTIMIZE can preserve ids through compaction (the spec
-            # stores the names in table config to avoid colliding with
-            # user columns)
-            create_conf.setdefault(
-                _RT_MAT_ID, f"_row-id-col-{uuid.uuid4().hex[:12]}"
-            )
-            create_conf.setdefault(
-                _RT_MAT_CV, f"_row-commit-col-{uuid.uuid4().hex[:12]}"
-            )
-        if cluster_by:
-            if partition_by:
-                raise DeltaProtocolError(
-                    "cluster_by and partition_by are mutually exclusive "
-                    "(clustering replaces hive partitioning)"
-                )
-            missing_cc = sorted(set(cluster_by) - set(df.columns))
-            if missing_cc:
-                raise DeltaProtocolError(
-                    f"clustering columns {missing_cc} not in the frame"
-                )
-        if generated:
-            df = _apply_generated(df, generated)  # compute or enforce
-        if identity:
-            bad = sorted(set(identity) & set(generated or {}))
-            if bad:
-                raise DeltaProtocolError(
-                    f"columns {bad} cannot be both generated and identity"
-                )
-            from pyspark.sql.types import LongType
-
-            create_specs = {
-                col: {
-                    "start": int(d.get("start", 1)),
-                    "step": int(d.get("step", 1)),
-                    "hwm": None,
-                    "allow": bool(d.get("allow_explicit", False)),
-                    "type": LongType(),
-                }
-                for col, d in identity.items()
-            }
-            df, id_hwm_updates, id_unpersist = _apply_identity(
-                df, create_specs
-            )
-        cm_mode = create_conf.get(_CM_MODE, "none")
-        if cm_mode in ("name", "id"):
-            fields = [
-                _mapped_field(f, i + 1) for i, f in enumerate(df.schema.fields)
-            ]
-            create_schema = StructType(fields)
-            create_conf[_CM_MAXID] = str(len(fields))
-            mapping = {f.name: f.metadata[_CM_PHYS] for f in fields}
-            if cm_mode == "id":
-                ids_map = {
-                    f.name: int(f.metadata[_CM_ID]) for f in fields
-                }
-        elif cm_mode != "none":
-            raise DeltaProtocolError(
-                f"column mapping mode {cm_mode!r} not supported "
-                "(none/name/id only)"
-            )
-        if generated:
-            # the generation expression lands in field metadata — the
-            # protocol's declaration, honored by every later write
-            base_fields = (create_schema or df.schema).fields
-            stamped = []
-            for f in base_fields:
-                if f.name in generated:
-                    md = dict(f.metadata or {})
-                    md[_GEN_EXPR] = generated[f.name]
-                    stamped.append(
-                        StructField(f.name, f.dataType, f.nullable, md)
-                    )
-                else:
-                    stamped.append(f)
-            create_schema = StructType(stamped)
-        if identity:
-            # the identity declaration (start/step/allowExplicitInsert)
-            # and the first high-water mark land in field metadata.
-            # (An identity name absent from the frame is the NORMAL
-            # omitted-column case — _apply_identity has already added
-            # it — so a typo'd name is indistinguishable from a
-            # declaration and cannot be guarded here.)
-            base_fields = (create_schema or df.schema).fields
-            stamped = []
-            for f in base_fields:
-                if f.name in identity:
-                    md = dict(f.metadata or {})
-                    md[_ID_START] = int(identity[f.name].get("start", 1))
-                    md[_ID_STEP] = int(identity[f.name].get("step", 1))
-                    md[_ID_ALLOW] = bool(
-                        identity[f.name].get("allow_explicit", False)
-                    )
-                    if f.name in id_hwm_updates:
-                        md[_ID_HWM] = int(id_hwm_updates[f.name])
-                    stamped.append(
-                        StructField(f.name, f.dataType, False, md)
-                    )
-                else:
-                    stamped.append(f)
-            create_schema = StructType(stamped)
-        if column_defaults:
-            # the DEFAULT declaration lands in field metadata under
-            # Spark's CURRENT_DEFAULT key — honored by every later
-            # write that omits the column. Validated NOW (constant-
-            # foldable, castable), not at first omitting write.
-            bad = sorted(
-                set(column_defaults)
-                & (set(generated or {}) | set(identity or {}))
-            )
-            if bad:
-                raise DeltaProtocolError(
-                    f"columns {bad} cannot carry a DEFAULT and a "
-                    "generation/identity declaration"
-                )
-            missing_cd = sorted(set(column_defaults) - set(df.columns))
-            if missing_cd:
-                raise DeltaProtocolError(
-                    f"DEFAULT declared for unknown columns {missing_cd}"
-                )
-            base_fields = (create_schema or df.schema).fields
-            stamped = []
-            for f in base_fields:
-                if f.name in column_defaults:
-                    _eval_default(
-                        spark, f.name, column_defaults[f.name], f.dataType
-                    )
-                    md = dict(f.metadata or {})
-                    md[_CD_CURRENT] = column_defaults[f.name]
-                    stamped.append(
-                        StructField(f.name, f.dataType, f.nullable, md)
-                    )
-                else:
-                    stamped.append(f)
-            create_schema = StructType(stamped)
-        _enforce_constraints(df, create_conf)
-    part_store = [mapping.get(c, c) for c in partition_by]
+        if not overwrite_schema:
+            w = _prepare_existing(df, prev, mode, partition_by)
+        elif mode != "overwrite":
+            # append would corrupt the files written under the old schema
+            raise DeltaProtocolError("overwrite_schema requires mode='overwrite'")
+        else:
+            w = _prepare_replace(df, prev, partition_by)
     added = _stage_write(
-        _to_physical(df, mapping, ids_map), table_path, part_store
+        _to_physical(w.df, w.snap.physical_names, _ids_if_id_mode(w.snap)),
+        table_path,
+        _phys_partition_cols(w.snap),
     )
-    for p in id_unpersist:
+    for p in w.unpersist:
         p.unpersist()
-
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = []
-    if base_version < 0:
-        conf = create_conf
-        if conf.get(_CDF_PROP, "").lower() == "true":
-            writer_v = 4
-        elif any(k.startswith(_CONSTRAINT_PREFIX) for k in conf):
-            writer_v = 3
-        else:
-            writer_v = 2
-        if generated:
-            writer_v = max(writer_v, 4)  # generated columns = writer v4
-        reader_v = 1
-        if conf.get(_CM_MODE, "none") != "none":
-            # legacy column-mapping protocol: reader 2 / writer 5
-            # (writer versions are cumulative, so CDF/constraints on
-            # the same table stay covered). Keyed on the MAPPING MODE,
-            # not create_schema: generated columns also stamp a
-            # create_schema but need no column-mapping protocol
-            reader_v, writer_v = 2, max(writer_v, 5)
-        if identity:
-            writer_v = max(writer_v, 6)  # identity columns = writer v6
-        v7_feats: set[str] = set()
-        if conf.get(_RT_PROP, "").lower() == "true":
-            v7_feats |= {"rowTracking", "domainMetadata"}
-        if conf.get(_ICT_PROP, "").lower() == "true":
-            v7_feats |= {"inCommitTimestamp"}
-        if cluster_by:
-            v7_feats |= {"clusteredTable", "domainMetadata"}
-        if conf.get(_TW_PROP, "").lower() == "true":
-            v7_feats |= {"typeWidening"}
-        if column_defaults:
-            v7_feats |= {_CD_FEATURE}  # writer-only: reads unaffected
-        if _schema_has_variant(create_schema or df.schema):
-            # VARIANT columns: reader-writer feature — files carry the
-            # parquet VARIANT logical type, so readers must understand
-            # the binary encoding (reader 3 + readerFeatures)
-            v7_feats |= {"variantType"}
-        if v7_feats:
-            # these capabilities exist only as writer-v7 table features;
-            # re-state everything the legacy writer version implied.
-            # The reader version stays legacy — none of them asks
-            # anything of readers — EXCEPT typeWidening, a reader-writer
-            # feature: pre-widen files keep the narrow physical type, so
-            # readers must know to upcast (reader 3 + readerFeatures)
-            wfeats = _implied_writer_features(writer_v) | v7_feats
-            proto: dict[str, Any] = {
-                "minReaderVersion": reader_v,
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(wfeats),
-            }
-            rw_feats = v7_feats & {"typeWidening", "variantType"}
-            if rw_feats:
-                rfeats = set(rw_feats)
-                if reader_v >= 2:  # column mapping was implied at r2
-                    rfeats |= {"columnMapping"}
-                proto["minReaderVersion"] = 3
-                proto["readerFeatures"] = sorted(rfeats)
-            actions.append({"protocol": proto})
-        else:
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": reader_v,
-                        "minWriterVersion": writer_v,
-                    }
-                }
-            )
-        actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": (create_schema or df.schema).json(),
-                    "partitionColumns": partition_by,
-                    "configuration": conf,
-                    "createdTime": now_ms,
-                }
-            }
-        )
-        if cluster_by:
-            actions.append(
-                {
-                    "domainMetadata": {
-                        "domain": _CLUSTER_DOMAIN,
-                        "configuration": json.dumps(
-                            {"clusteringColumns": [[c] for c in cluster_by]}
-                        ),
-                        "removed": False,
-                    }
-                }
-            )
-    elif evolved_schema is not None:
-        prev_features = set(
-            prev.protocol.get("writerFeatures") or []
-        ) | _implied_writer_features(
-            int(prev.protocol.get("minWriterVersion", 2))
-        )
-        upgrade_feats: set[str] = set()
-        if widen_cols and "typeWidening" not in prev_features:
-            # a widen on a table whose protocol predates the feature
-            # (foreign table carrying the property): upgrade in the
-            # same commit, everything implied made explicit
-            upgrade_feats |= {"typeWidening"}
-        if (
-            _schema_has_variant(evolved_schema)
-            and not _schema_has_variant(prev.schema)
-            and "variantType" not in prev_features
-        ):
-            # mergeSchema evolution introducing the table's first
-            # VARIANT column: stamp the reader-writer feature in the
-            # same commit (same shape as the widening upgrade)
-            upgrade_feats |= {"variantType"}
-        if upgrade_feats:
-            rf, wf = _explicit_features(prev)
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 3,
-                        "minWriterVersion": 7,
-                        "readerFeatures": sorted(rf | upgrade_feats),
-                        "writerFeatures": sorted(wf | upgrade_feats),
-                    }
-                }
-            )
-        actions.append(
-            {
-                "metaData": {
-                    # the table identity is immutable: re-emit the existing
-                    # metaData.id (a fresh uuid would read as table replacement)
-                    "id": prev.metadata_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": evolved_schema.json(),
-                    # carry the table's partitioning/config forward — an
-                    # evolution commit widens the schema (and, under
-                    # column mapping, bumps maxColumnId), nothing else
-                    "partitionColumns": partition_by,
-                    "configuration": evolved_configuration,
-                }
-            }
-        )
-    if mode == "overwrite":
-        for rel, a in prev_files.items():
-            actions.append(_remove_action(a, now_ms, True))
-    stat_cols = [
-        mapping.get(c, c) for c in _stats_columns(df.schema, partition_by)
-    ]
-    for rel in added:
-        actions.append(
-            _add_action(table_path, rel, part_store, stat_cols, now_ms)
-        )
-    rt_enabled = (
-        (prev_configuration if base_version >= 0 else create_conf)
-        .get(_RT_PROP, "").lower() == "true"
-    )
-    if rt_enabled:
-        # row tracking: every fresh add gets a disjoint id range above
-        # the domain's high-water mark; the same commit advances the
-        # mark. An overwrite never reuses ids — the mark only rises.
-        _stamp_row_tracking(table_path, actions, rt_prev_hwm, base_version + 1)
-    if txn is not None:
-        actions.append(
-            {"txn": {"appId": txn[0], "version": int(txn[1]), "lastUpdated": now_ms}}
-        )
-    info: dict[str, Any] = {
-        "timestamp": now_ms,
-        "operation": "WRITE",
-        "operationParameters": {"mode": mode.upper()},
-    }
-    if (
-        base_version < 0
-        and create_conf.get(_ICT_PROP, "").lower() == "true"
-    ):
-        # seed the inCommitTimestamp field on the creation commit; every
-        # later writer inherits it via _clamp_commit_ts
-        info["inCommitTimestamp"] = now_ms
-    actions.append({"commitInfo": info})
-    rt_domains = frozenset({_RT_DOMAIN}) if rt_enabled else frozenset()
-    if mode == "overwrite" and base_version >= 0:
+    params = {"mode": mode.upper()}
+    if mode == "overwrite" and w.snap.version >= 0:
+        if overwrite_schema:
+            params["overwriteSchema"] = "true"
+        files = w.snap.files
         guard = _CommitGuard(
-            read_whole_table=True,
-            removed=set(prev_files),
-            read_files=set(prev_files),
-            has_metadata=evolved_schema is not None,
-            txn_app=txn[0] if txn else None,
-            domains=rt_domains,
-            stamp_row_commit_version=rt_enabled,
+            read_whole_table=True, removed=set(files), read_files=set(files)
         )
     else:
-        guard = _CommitGuard(
-            blind_append=mode == "append",
-            has_metadata=base_version < 0 or evolved_schema is not None,
-            txn_app=txn[0] if txn else None,
-            domains=rt_domains,
-            stamp_row_commit_version=rt_enabled,
-        )
-    guard.ict = _ict_on(
-        prev_configuration if base_version >= 0 else create_conf
+        files = {}
+        guard = _CommitGuard(blind_append=mode == "append")
+    return _author_commit(
+        table_path, w.snap, operation="WRITE", params=params, adds=added,
+        removes=list(files.values()), metadata=w.metadata,
+        protocol=w.protocol, extra=w.extra, txn=txn, guard=guard,
     )
-    return _commit(table_path, actions, guard, base_version)
 
 
 def restore_delta(
@@ -2582,51 +2481,38 @@ def restore_delta(
     cur = snapshot(spark, table_path)
     _reject_if_append_only(cur, "RESTORE")
     tgt = snapshot(spark, table_path, version)
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = []
+    meta = None
     if (
         tgt.schema != cur.schema
         or tgt.partition_columns != cur.partition_columns
         or tgt.configuration != cur.configuration
     ):
-        actions.append(
-            {
-                "metaData": {
-                    # the table identity is immutable: re-emit the existing
-                    # metaData.id (a fresh uuid would read as table replacement)
-                    "id": tgt.metadata_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": tgt.schema.json(),
-                    "partitionColumns": tgt.partition_columns,
-                    "configuration": tgt.configuration,
-                }
-            }
-        )
-    for rel, a in cur.files.items():
-        if rel not in tgt.files:
-            actions.append(_remove_action(a, now_ms, True))
-    for rel, a in tgt.files.items():
-        if rel not in cur.files:
-            restored = dict(a)
-            restored["dataChange"] = True
-            actions.append({"add": restored})
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "RESTORE",
-                "operationParameters": {"version": version},
-            }
-        }
+        meta = _metadata_action(tgt)
+    # a file live in both versions under a different deletion vector
+    # changed too: re-adding the target's add restores its rows
+    changed = {
+        rel for rel, a in tgt.files.items()
+        if rel in cur.files
+        and a.get("deletionVector") != cur.files[rel].get("deletionVector")
+    }
+    return _author_commit(
+        table_path, cur, operation="RESTORE", params={"version": version},
+        adds=[
+            dict(a, dataChange=True)
+            for rel, a in tgt.files.items()
+            if rel not in cur.files or rel in changed
+        ],
+        removes=[
+            a for rel, a in cur.files.items()
+            if rel not in tgt.files or rel in changed
+        ],
+        metadata=meta,
+        guard=_CommitGuard(
+            read_whole_table=True,
+            removed=set(cur.files),
+            read_files=set(cur.files),
+        ),
     )
-    guard = _CommitGuard(
-        read_whole_table=True,
-        removed=set(cur.files),
-        read_files=set(cur.files),
-        has_metadata=bool(actions and "metaData" in actions[0]),
-        ict=_ict_on(cur.configuration),
-    )
-    return _commit(table_path, actions, guard, cur.version)
 
 
 def describe_history(spark: SparkSession, table_path: str) -> DataFrame:
@@ -2690,22 +2576,9 @@ def clone_delta(spark: SparkSession, src_path: str, dst_path: str) -> int:
     if os.path.exists(_log_path(dst_path)):
         raise DeltaProtocolError(f"destination {dst_path} already exists")
     os.makedirs(_log_path(dst_path))
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = [
-        {"protocol": snap.protocol},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema.json(),
-                "partitionColumns": snap.partition_columns,
-                "configuration": snap.configuration,
-                "createdTime": now_ms,
-            }
-        },
-    ]
     from .delta_dv import dv_relative_path
 
+    adds = []
     for rel, a in snap.files.items():
         aa = dict(a)
         aa["path"] = quote(
@@ -2722,22 +2595,19 @@ def clone_delta(spark: SparkSession, src_path: str, dst_path: str) -> int:
                     )
                 ),
             }
-        actions.append({"add": aa})
-    # domain metadata (e.g. the row-tracking high-water mark) must ride
-    # along or later writes to the clone would re-issue row ids
-    for _, d in sorted(snap.domain_metadata.items()):
-        actions.append({"domainMetadata": dict(d)})
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "CLONE",
-                "operationParameters": {"source": src_path},
-            }
-        }
+        adds.append(aa)
+    new = replace(snap, version=-1, metadata_id=None)
+    return _author_commit(
+        dst_path, new, operation="CLONE", params={"source": src_path},
+        adds=adds, metadata=_metadata_action(new), protocol=snap.protocol,
+        # domain metadata (e.g. the row-tracking high-water mark) must
+        # ride along or later writes to the clone would re-issue row ids
+        extra=[
+            {"domainMetadata": dict(d)}
+            for _, d in sorted(snap.domain_metadata.items())
+        ],
+        guard=_CommitGuard(),
     )
-    guard = _CommitGuard(has_metadata=True, ict=_ict_on(snap.configuration))
-    return _commit(dst_path, actions, guard, -1)
 
 
 def _strip_empty_json(v: Any) -> Any:
@@ -2849,17 +2719,7 @@ def _checkpoint_state_rows(snap: DeltaSnapshot) -> tuple[list[dict], list[dict]]
     table_rows = (
         [
             {"protocol": snap.protocol},
-            {
-                "metaData": {
-                    # the table identity is immutable: re-emit the existing
-                    # metaData.id (a fresh uuid would read as table replacement)
-                    "id": snap.metadata_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": snap.schema.json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": snap.configuration,
-                }
-            },
+            _metadata_action(snap),
         ]
         + [
             {"txn": {"appId": app, "version": v}}
@@ -3049,28 +2909,12 @@ def _upgrade_protocol_feature(
     feature is already listed. Returns the version holding the
     upgraded protocol."""
     snap = snapshot(spark, table_path)
-    if feature in set(snap.protocol.get("readerFeatures") or []):
+    protocol = _rw_feature_protocol(snap, {feature})
+    if protocol is None:
         return snap.version
-    rfeats, wfeats = _explicit_features(snap)
-    action = {
-        "protocol": {
-            "minReaderVersion": 3,
-            "minWriterVersion": 7,
-            "readerFeatures": sorted(rfeats | {feature}),
-            "writerFeatures": sorted(wfeats | {feature}),
-        }
-    }
-    info = {
-        "commitInfo": {
-            "timestamp": int(time.time() * 1000),
-            "operation": "UPGRADE PROTOCOL",
-            "operationParameters": {},
-        }
-    }
-    return _commit(
-        table_path, [action, info],
-        _CommitGuard(has_metadata=True, ict=_ict_on(snap.configuration)),
-        snap.version,
+    return _author_commit(
+        table_path, snap, operation="UPGRADE PROTOCOL", params={},
+        protocol=protocol, guard=_CommitGuard(),
     )
 
 
@@ -3475,22 +3319,6 @@ def _apply_identity(
     return df, hwm_updates, to_unpersist
 
 
-def _patch_identity_hwm(
-    schema: StructType, hwm_updates: dict[str, int]
-) -> StructType:
-    """``schema`` with each identity field's high-water-mark metadata
-    replaced — the metaData action every assigning write must emit."""
-    fields = []
-    for f in schema.fields:
-        if f.name in hwm_updates:
-            md = dict(f.metadata or {})
-            md[_ID_HWM] = int(hwm_updates[f.name])
-            fields.append(StructField(f.name, f.dataType, f.nullable, md))
-        else:
-            fields.append(f)
-    return StructType(fields)
-
-
 def _reject_identity_assignment(
     schema: StructType, target_cols: set[str], op: str
 ) -> None:
@@ -3548,10 +3376,7 @@ def _reject_rewrite_row_tracking(snap: DeltaSnapshot, op: str) -> None:
     path (delete_delta_dv) rewrites nothing, and OPTIMIZE preserves ids
     by materializing them into the compacted files (optimize_delta);
     both stay allowed."""
-    if (
-        _RT_DOMAIN in snap.domain_metadata
-        or snap.configuration.get(_RT_PROP, "").lower() == "true"
-    ):
+    if _rt_on(snap):
         raise DeltaProtocolError(
             f"{op} rewrites data files and would lose row-tracking ids; "
             "use deletion vectors (delete_delta_dv) or disable "
@@ -3649,46 +3474,18 @@ def add_check_constraint(
     current = _scan_files(spark, table_path, snap, list(snap.files))
     _enforce_constraints(current, {key: expr})
 
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = []
+    protocol = None
     if int(snap.protocol.get("minWriterVersion", 2)) < 3:
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": snap.protocol.get("minReaderVersion", 1),
-                    "minWriterVersion": 3,
-                }
-            }
-        )
-    actions.append(
-        {
-            "metaData": {
-                # the table identity is immutable: re-emit the existing
-                # metaData.id (a fresh uuid would read as table replacement)
-                "id": snap.metadata_id or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.schema.json(),
-                "partitionColumns": snap.partition_columns,
-                "configuration": new_conf,
-            }
+        protocol = {
+            "minReaderVersion": snap.protocol.get("minReaderVersion", 1),
+            "minWriterVersion": 3,
         }
+    return _author_commit(
+        table_path, snap, operation="ADD CONSTRAINT",
+        params={"name": name, "expr": expr},
+        metadata=_metadata_action(snap, conf=new_conf), protocol=protocol,
+        guard=_CommitGuard(read_whole_table=True, read_files=set(snap.files)),
     )
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "ADD CONSTRAINT",
-                "operationParameters": {"name": name, "expr": expr},
-            }
-        }
-    )
-    guard = _CommitGuard(
-        read_whole_table=True,
-        read_files=set(snap.files),
-        has_metadata=True,
-    )
-    guard.ict = _ict_on(snap.configuration)
-    return _commit(table_path, actions, guard, snap.version)
 
 
 def _constraint_mentions(configuration: dict[str, str], col: str) -> list[str]:
@@ -3739,30 +3536,15 @@ def _alter_schema_commit(
     ANY concurrent commit (metadata changes always do). ``protocol``
     rides a protocol upgrade in the SAME commit (how delta-spark adds
     a table feature an ALTER first requires)."""
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = ([{"protocol": protocol}] if protocol else []) + [
-        {
-            "metaData": {
-                # the table identity is immutable: re-emit the existing
-                # metaData.id (a fresh uuid would read as table replacement)
-                "id": snap.metadata_id or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": new_schema.json(),
-                "partitionColumns": new_partition_columns,
-                "configuration": new_conf,
-            }
-        },
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": op,
-                "operationParameters": params,
-            }
-        },
-    ]
-    guard = _CommitGuard(has_metadata=True, read_whole_table=True)
-    guard.ict = _ict_on(snap.configuration)
-    return _commit(table_path, actions, guard, snap.version)
+    return _author_commit(
+        table_path, snap, operation=op, params=params,
+        metadata=_metadata_action(
+            snap, schema=new_schema, conf=new_conf,
+            partition_columns=new_partition_columns,
+        ),
+        protocol=protocol,
+        guard=_CommitGuard(read_whole_table=True),
+    )
 
 
 def rename_column(
@@ -3937,6 +3719,24 @@ def _writer_feature_protocol(
     return proto
 
 
+def _rw_feature_protocol(
+    snap: DeltaSnapshot, feats: set[str]
+) -> dict[str, Any] | None:
+    """Protocol action adding READER-WRITER features (reader 3 / writer
+    7), or None when every one is already listed — the reader-writer
+    twin of _writer_feature_protocol, with every implied legacy
+    capability re-stated the same way."""
+    if feats <= set(snap.protocol.get("readerFeatures") or []):
+        return None
+    rfeats, wfeats = _explicit_features(snap)
+    return {
+        "minReaderVersion": 3,
+        "minWriterVersion": 7,
+        "readerFeatures": sorted(rfeats | feats),
+        "writerFeatures": sorted(wfeats | feats),
+    }
+
+
 def set_column_default(
     spark: SparkSession, table_path: str, col: str, default_sql: str
 ) -> int:
@@ -3961,18 +3761,9 @@ def set_column_default(
             "fill semantics; a DEFAULT cannot coexist"
         )
     _eval_default(spark, col, default_sql, by_name[col].dataType)
-    new_fields = []
-    for f in snap.schema.fields:
-        if f.name == col:
-            md = dict(f.metadata or {})
-            md[_CD_CURRENT] = default_sql
-            new_fields.append(
-                StructField(f.name, f.dataType, f.nullable, md)
-            )
-        else:
-            new_fields.append(f)
     return _alter_schema_commit(
-        table_path, snap, StructType(new_fields), snap.partition_columns,
+        table_path, snap, _stamp_fields(snap.schema, {col: {_CD_CURRENT: default_sql}}),
+        snap.partition_columns,
         dict(snap.configuration), "ALTER COLUMN",
         {"column": col, "setDefault": default_sql},
         protocol=_writer_feature_protocol(snap, _CD_FEATURE),
@@ -4387,41 +4178,73 @@ def overwrite_partitions_delta(
         _to_physical(df, snap.physical_names, _ids_if_id_mode(snap)), table_path, part_store
     )
 
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = []
-    for rel in doomed:
-        actions.append(_remove_action(snap.files[rel], now_ms, True))
-    stat_cols = _phys_stat_cols(snap)
-    for rel in added:
-        actions.append(
-            _add_action(table_path, rel, part_store, stat_cols, now_ms)
-        )
-    rt_enabled = _RT_DOMAIN in snap.domain_metadata
-    if rt_enabled:
-        # replaced partitions carry NEW rows: fresh disjoint id ranges,
-        # mark advanced — ids of the replaced rows are never reused
-        _stamp_row_tracking(
-            table_path, actions, _rt_prev_hwm(snap), snap.version + 1
-        )
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "WRITE",
-                "operationParameters": {"mode": "OVERWRITE", "predicate": "dynamic"},
-            }
-        }
+    return _author_commit(
+        table_path, snap, operation="WRITE",
+        params={"mode": "OVERWRITE", "predicate": "dynamic"},
+        adds=added, removes=[snap.files[rel] for rel in doomed],
+        guard=_CommitGuard(
+            removed=set(doomed),
+            read_files=set(doomed),
+            partitions=new_parts,
+            pcols=part_store,  # conflict checks read pv keys = physical
+        ),
     )
-    guard = _CommitGuard(
-        removed=set(doomed),
-        read_files=set(doomed),
-        partitions=new_parts,
-        pcols=part_store,  # conflict checks read pv keys = physical
-        domains=frozenset({_RT_DOMAIN}) if rt_enabled else frozenset(),
-        stamp_row_commit_version=rt_enabled,
+
+
+def _files_where(
+    spark: SparkSession, snap: DeltaSnapshot, rels: list[str], where: str
+) -> list[str]:
+    """The files among ``rels`` whose partition values satisfy ``where``
+    (OPTIMIZE ... WHERE): a predicate over PARTITION columns evaluated
+    against add.partitionValues, O(files) metadata, zero data reads."""
+    if not snap.partition_columns:
+        raise DeltaProtocolError(
+            "OPTIMIZE ... WHERE requires a partitioned table (the "
+            "predicate is evaluated over partition values)"
+        )
+    # evaluate the predicate over partitionValues, driver-built but
+    # Spark-evaluated so any SQL expression over the partition
+    # columns works; O(files) metadata rows
+    ptypes = {f.name: f.dataType for f in snap.schema.fields}
+    pv_rows = [
+        (
+            rel,
+            *[
+                _hive_val(
+                    snap.files[rel]
+                    .get("partitionValues", {})
+                    .get(snap.physical(c))
+                )
+                for c in snap.partition_columns
+            ],
+        )
+        for rel in rels
+    ]
+    pdf = _local_df(
+        spark,
+        pv_rows,
+        StructType(
+            [StructField("__rel", StringType())]
+            + [
+                StructField(c, StringType())
+                for c in snap.partition_columns
+            ]
+        ),
     )
-    guard.ict = _ict_on(snap.configuration)
-    return _commit(table_path, actions, guard, snap.version)
+    for c in snap.partition_columns:
+        pdf = pdf.withColumn(
+            c,
+            F.when(F.col(c) == HIVE_NULL, None)
+            .otherwise(F.col(c))
+            .cast(ptypes[c]),
+        )
+    keep = {
+        r["__rel"]
+        for r in pdf.filter(
+            F.coalesce(F.expr(where), F.lit(False))
+        ).select("__rel").collect()
+    }
+    return [r for r in rels if r in keep]
 
 
 def optimize_delta(
@@ -4471,7 +4294,7 @@ def optimize_delta(
     # front ends (delete_delta etc.) — delta_coordinated routes OPTIMIZE
     # through staged-ratification by passing both
     snap = snap or snapshot(spark, table_path)
-    rt_enabled = _RT_DOMAIN in snap.domain_metadata
+    rt_enabled = _rt_on(snap)
     if zorder_by is not None and snap.partition_columns:
         raise DeltaProtocolError(
             "ZORDER BY on a hive-partitioned table would break the "
@@ -4485,54 +4308,7 @@ def optimize_delta(
         )
     rels = list(snap.files)
     if where is not None:
-        if not snap.partition_columns:
-            raise DeltaProtocolError(
-                "OPTIMIZE ... WHERE requires a partitioned table (the "
-                "predicate is evaluated over partition values)"
-            )
-        # evaluate the predicate over partitionValues, driver-built but
-        # Spark-evaluated so any SQL expression over the partition
-        # columns works; O(files) metadata rows
-        ptypes = {f.name: f.dataType for f in snap.schema.fields}
-        pv_rows = [
-            (
-                rel,
-                *[
-                    _hive_val(
-                        snap.files[rel]
-                        .get("partitionValues", {})
-                        .get(snap.physical(c))
-                    )
-                    for c in snap.partition_columns
-                ],
-            )
-            for rel in rels
-        ]
-        pdf = _local_df(
-            spark,
-            pv_rows,
-            StructType(
-                [StructField("__rel", StringType())]
-                + [
-                    StructField(c, StringType())
-                    for c in snap.partition_columns
-                ]
-            ),
-        )
-        for c in snap.partition_columns:
-            pdf = pdf.withColumn(
-                c,
-                F.when(F.col(c) == HIVE_NULL, None)
-                .otherwise(F.col(c))
-                .cast(ptypes[c]),
-            )
-        keep = {
-            r["__rel"]
-            for r in pdf.filter(
-                F.coalesce(F.expr(where), F.lit(False))
-            ).select("__rel").collect()
-        }
-        rels = [r for r in rels if r in keep]
+        rels = _files_where(spark, snap, rels, where)
     if min_file_size is not None:
         rels = [
             r for r in rels
@@ -4601,62 +4377,25 @@ def optimize_delta(
         _phys_partition_cols(snap),
     )
 
-    now_ms = int(time.time() * 1000)
-    stat_cols = _phys_stat_cols(snap)
-    actions: list[dict[str, Any]] = []
-    if rt_conf_update is not None:
-        actions.append(
-            {
-                "metaData": {
-                    # the table identity is immutable: re-emit the existing
-                    # metaData.id (a fresh uuid would read as table replacement)
-                    "id": snap.metadata_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": snap.schema.json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": rt_conf_update,
-                }
-            }
-        )
-    actions.extend(
-        _remove_action(snap.files[rel], now_ms, False) for rel in rels
+    # on a row-tracking table the compacted adds still get fresh
+    # baseRowIds (every add carries one); readers never see them — the
+    # materialized columns take precedence — but the mark advances so
+    # they stay globally unique
+    return _author_commit(
+        table_path, snap, operation="OPTIMIZE",
+        params={
+            "zOrderBy": list(zorder_by) if zorder_by else [],
+            "predicate": where or "",
+        },
+        adds=added, removes=[snap.files[rel] for rel in rels],
+        metadata=(
+            None if rt_conf_update is None
+            else _metadata_action(snap, conf=rt_conf_update)
+        ),
+        data_change=False,
+        guard=_CommitGuard(removed=set(rels), read_files=set(rels)),
+        commit_fn=commit_fn,
     )
-    for rel in added:
-        actions.append(
-            _add_action(
-                table_path, rel, _phys_partition_cols(snap), stat_cols, now_ms,
-                data_change=False,
-            )
-        )
-    if rt_enabled:
-        # fresh baseRowIds for the compacted adds (every add on a
-        # row-tracking table carries one); readers never see them —
-        # the materialized columns take precedence — but the mark
-        # still advances so they stay globally unique
-        _stamp_row_tracking(
-            table_path, actions, _rt_prev_hwm(snap), snap.version + 1
-        )
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "zOrderBy": list(zorder_by) if zorder_by else [],
-                    "predicate": where or "",
-                },
-            }
-        }
-    )
-    guard = _CommitGuard(
-        removed=set(rels),
-        read_files=set(rels),
-        has_metadata=rt_conf_update is not None,
-        domains=frozenset({_RT_DOMAIN}) if rt_enabled else frozenset(),
-        stamp_row_commit_version=rt_enabled,
-    )
-    guard.ict = _ict_on(snap.configuration)
-    return (commit_fn or _commit)(table_path, actions, guard, snap.version)
 
 
 def _matched_files(
@@ -4776,7 +4515,7 @@ def _dml_commit(
     pred_desc: str,
     guard: _CommitGuard,
     change_bytes: int = 0,
-    extra_actions: list[dict[str, Any]] | None = None,
+    metadata: dict[str, Any] | None = None,
     commit_fn=None,
 ) -> int:
     """Rewrite ``candidates`` through ``survivors_of`` and author the
@@ -4788,8 +4527,8 @@ def _dml_commit(
     shuffle join by bytes itself. The change rows are sized by bytes,
     not by shuffle width: at most ceil((candidates' bytes +
     ``change_bytes``, e.g. a MERGE's source) / _WRITE_TASK_BYTES) cdc
-    files per partition value. ``extra_actions`` (e.g. an identity
-    high-water-mark metaData) land before commitInfo."""
+    files per partition value. ``metadata`` (e.g. an identity
+    high-water-mark metaData) rides the same commit."""
     affected = _scan_files(spark, table_path, snap, candidates)
     survivors = survivors_of(affected)
 
@@ -4798,33 +4537,15 @@ def _dml_commit(
         table_path,
         _phys_partition_cols(snap),
     )
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = [
-        _remove_action(snap.files[rel], now_ms, True) for rel in candidates
-    ]
-    stat_cols = _phys_stat_cols(snap)
-    for rel in added:
-        actions.append(
-            _add_action(
-                table_path, rel, _phys_partition_cols(snap), stat_cols, now_ms
-            )
-        )
+    cdc: list[dict[str, Any]] = []
     if _cdf_enabled(snap):
         nbytes = _files_bytes(snap, candidates) + change_bytes
-        actions.extend(_stage_cdf(changes_of(affected), table_path, snap, nbytes))
-    if extra_actions:
-        actions.extend(extra_actions)
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": op,
-                "operationParameters": {"predicate": pred_desc},
-            }
-        }
+        cdc = _stage_cdf(changes_of(affected), table_path, snap, nbytes)
+    return _author_commit(
+        table_path, snap, operation=op, params={"predicate": pred_desc},
+        adds=added, removes=[snap.files[rel] for rel in candidates],
+        metadata=metadata, extra=cdc, guard=guard, commit_fn=commit_fn,
     )
-    guard.ict = _ict_on(snap.configuration)
-    return (commit_fn or _commit)(table_path, actions, guard, snap.version)
 
 
 def delete_rows(
@@ -5080,8 +4801,12 @@ def merge_delta(
         raise ValueError("when_not_matched_by_source must be None or 'delete'")
     keys = [key] if isinstance(key, str) else list(key)
     snap = snap or snapshot(spark, table_path)
-    _reject_if_append_only(snap, "MERGE")
-    _reject_rewrite_row_tracking(snap, "MERGE (copy-on-write)")
+    insert_only = when_matched == "ignore" and when_not_matched_by_source is None
+    if not insert_only:
+        # an insert-only MERGE appends: it neither removes rows nor
+        # rewrites files, so append-only and row-tracking tables take it
+        _reject_if_append_only(snap, "MERGE")
+        _reject_rewrite_row_tracking(snap, "MERGE (copy-on-write)")
     tcols = [f.name for f in snap.schema.fields]
     missing = [k for k in keys if k not in tcols]
     if missing:
@@ -5129,16 +4854,16 @@ def merge_delta(
         lo, hi = stats["lo"], stats["hi"]
         if lo is None and when_not_matched_by_source is None:
             return snap.version, 0  # empty source: nothing to merge
-        id_extra = _merge_identity_hwm(src, snap, id_specs)
+        id_meta = _merge_identity_hwm(src, snap, id_specs)
         on_desc = " AND ".join(f"target.{k} = source.{k}" for k in keys)
         # the cached source's materialized size, from plan stats (no job)
         src_plan = src._jdf.queryExecution().optimizedPlan()
         src_bytes = int(src_plan.stats().sizeInBytes())
-        if when_matched == "ignore" and when_not_matched_by_source is None:
+        if insert_only:
             v = _merge_append(
                 spark, table_path, snap, src, keys, lo, hi,
                 src_bytes=src_bytes, on_desc=on_desc,
-                extra_actions=id_extra, commit_fn=commit_fn,
+                metadata=id_meta, commit_fn=commit_fn,
             )
             return v, 0
         # no .distinct(): the guard above just PROVED the source keys
@@ -5163,62 +4888,22 @@ def merge_delta(
         affected = _scan_files(spark, table_path, snap, candidates)
         tgt_keys = affected.select(*keys).distinct()
         inserts = src.join(tgt_keys, keys, "left_anti")
-        if when_matched == "update":
-            # per-TARGET-row update via left join: a duplicate-key target
-            # keeps its multiplicity — EVERY matched row takes the source
-            # values, exactly as Delta's WHEN MATCHED UPDATE does (an
-            # anti-join + source-union would silently collapse duplicates)
-            val_cols = [c for c in tcols if c not in keys]
-            srcm = src.select(
-                *keys,
-                F.lit(True).alias("__matched"),
-                *[F.col(c).alias(f"__src_{c}") for c in val_cols],
-            )
-            joined = affected.join(srcm, keys, "left")  # AQE picks the strategy
-            replaced = joined.select(
-                *[
-                    F.when(
-                        F.col("__matched").isNotNull(), F.col(f"__src_{c}")
-                    )
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    if c not in keys
-                    else F.col(c)
-                    for c in tcols
-                ]
-            )
-            preimage = affected.join(src_keys, keys, "left_semi")
-            postimage = joined.filter(F.col("__matched").isNotNull()).select(
-                *[
-                    F.col(f"__src_{c}").alias(c) if c not in keys else F.col(c)
-                    for c in tcols
-                ]
-            )
-            matched_kept = postimage
-        else:  # ignore + by-source delete: matched rows keep their values
-            replaced = affected
-            preimage = affected.limit(0)
-            postimage = src.limit(0)  # src is projected to tcols above
-            matched_kept = affected.join(src_keys, keys, "left_semi")
+        replaced, preimage, postimage, matched_kept = _merge_matched(
+            affected, src, src_keys, keys, update=when_matched == "update"
+        )
         deleted = affected.limit(0)
         if when_not_matched_by_source == "delete":
             deleted = affected.join(src_keys, keys, "left_anti")
             replaced = matched_kept  # unmatched-by-source rows drop out
         new_content = replaced.unionByName(inserts)
 
-        if when_not_matched_by_source is None:
-            guard = _CommitGuard(
-                removed=set(candidates),
-                read_files=set(candidates),
-                predicate=(snap.physical(keys[0]), lo, hi),
-            )
-        else:
-            guard = _CommitGuard(
-                removed=set(candidates),
-                read_files=set(candidates),
-                read_whole_table=True,
-            )
-        guard.has_metadata = bool(id_extra)
+        by_source = when_not_matched_by_source is not None
+        guard = _CommitGuard(
+            removed=set(candidates),
+            read_files=set(candidates),
+            read_whole_table=by_source,
+            predicate=None if by_source else (snap.physical(keys[0]), lo, hi),
+        )
 
         def _changes(_df: DataFrame) -> DataFrame:
             pre = preimage.withColumn("_change_type", F.lit("update_preimage"))
@@ -5235,7 +4920,7 @@ def merge_delta(
             survivors_of=lambda _df: _sized(new_content, nbytes),
             changes_of=_changes,
             op="MERGE", pred_desc=on_desc, guard=guard,
-            change_bytes=src_bytes, extra_actions=id_extra,
+            change_bytes=src_bytes, metadata=id_meta,
             commit_fn=commit_fn,
         )
     finally:
@@ -5246,15 +4931,60 @@ def merge_delta(
     return v, len(candidates)
 
 
+def _merge_matched(
+    affected: DataFrame,
+    src: DataFrame,
+    src_keys: DataFrame,
+    keys: list[str],
+    *,
+    update: bool,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The WHEN MATCHED clause over the affected files: (their rows after
+    the clause, update preimages, update postimages, matched rows as
+    they survive). ``src`` is projected to the table columns."""
+    if not update:  # ignore: matched rows keep their values
+        return (
+            affected, affected.limit(0), src.limit(0),
+            affected.join(src_keys, keys, "left_semi"),
+        )
+    # per-TARGET-row update via left join: a duplicate-key target keeps
+    # its multiplicity — EVERY matched row takes the source values,
+    # exactly as Delta's WHEN MATCHED UPDATE does (an anti-join +
+    # source-union would silently collapse duplicates)
+    tcols = src.columns
+    val_cols = [c for c in tcols if c not in keys]
+    srcm = src.select(
+        *keys,
+        F.lit(True).alias("__matched"),
+        *[F.col(c).alias(f"__src_{c}") for c in val_cols],
+    )
+    joined = affected.join(srcm, keys, "left")  # AQE picks the strategy
+    replaced = joined.select(
+        *[
+            F.when(F.col("__matched").isNotNull(), F.col(f"__src_{c}"))
+            .otherwise(F.col(c))
+            .alias(c)
+            if c not in keys
+            else F.col(c)
+            for c in tcols
+        ]
+    )
+    preimage = affected.join(src_keys, keys, "left_semi")
+    postimage = joined.filter(F.col("__matched").isNotNull()).select(
+        *[F.col(f"__src_{c}").alias(c) if c not in keys else F.col(c) for c in tcols]
+    )
+    return replaced, preimage, postimage, postimage
+
+
 def _merge_identity_hwm(
     src: DataFrame, snap: DeltaSnapshot, id_specs: dict[str, dict[str, Any]]
-) -> list[dict[str, Any]]:
+) -> dict[str, Any] | None:
     """The metaData action advancing BY DEFAULT identity high-water
-    marks past a MERGE source's explicit ids (empty when none moves) —
+    marks past a MERGE source's explicit ids (None when none moves) —
     without it a later system assignment would collide. One aggregate
     over the already-cached source."""
     if not id_specs:
-        return []
+        return None
     aggs = []
     for c, sp in id_specs.items():
         aggs.append((F.max(c) if sp["step"] > 0 else F.min(c)).alias(c))
@@ -5272,22 +5002,13 @@ def _merge_identity_hwm(
         if old is None or (step > 0 and ext > old) or (step < 0 and ext < old):
             hwm_updates[c] = ext
     if not hwm_updates:
-        return []
-    return [
-        {
-            "metaData": {
-                # the table identity is immutable: re-emit the existing
-                # metaData.id (a fresh uuid would read as table replacement)
-                "id": snap.metadata_id or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": _patch_identity_hwm(
-                    snap.schema, hwm_updates
-                ).json(),
-                "partitionColumns": snap.partition_columns,
-                "configuration": snap.configuration,
-            }
-        }
-    ]
+        return None
+    return _metadata_action(
+        snap,
+        schema=_stamp_fields(
+            snap.schema, {c: {_ID_HWM: v} for c, v in hwm_updates.items()}
+        ),
+    )
 
 
 def _merge_append(
@@ -5301,7 +5022,7 @@ def _merge_append(
     *,
     src_bytes: int,
     on_desc: str,
-    extra_actions: list[dict[str, Any]],
+    metadata: dict[str, Any] | None,
     commit_fn=None,
 ) -> int:
     """Insert-only MERGE committed as an append. A source row can only
@@ -5317,42 +5038,30 @@ def _merge_append(
     candidates, _ = prune_files_by_stats(snap, keys[0], lo, hi)
     target_keys = _scan_files(spark, table_path, snap, candidates).select(*keys)
     inserts = src.join(target_keys, keys, "left_anti")
-    pcols = _phys_partition_cols(snap)
     added = _stage_write(
         _to_physical(
             _sized(inserts, src_bytes), snap.physical_names, _ids_if_id_mode(snap)
         ),
         table_path,
-        pcols,
+        _phys_partition_cols(snap),
     )
-    now_ms = int(time.time() * 1000)
-    stat_cols = _phys_stat_cols(snap)
-    actions: list[dict[str, Any]] = []
+    adds = []
     for rel in added:
-        a = _add_action(table_path, rel, pcols, stat_cols, now_ms)
-        if _add_num_records(table_path, a["add"]):
-            actions.append(a)
+        if _num_rows(table_path, rel):
+            adds.append(rel)
         else:  # nothing inserted: Spark still writes one schema-only file
             os.remove(os.path.join(table_path, rel))
-    actions.extend(extra_actions)
-    if not actions:
+    if not adds and metadata is None:
         return snap.version
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "MERGE",
-                "operationParameters": {"predicate": on_desc},
-            }
-        }
+    return _author_commit(
+        table_path, snap, operation="MERGE", params={"predicate": on_desc},
+        adds=adds, metadata=metadata,
+        guard=_CommitGuard(
+            read_files=set(candidates),
+            predicate=(snap.physical(keys[0]), lo, hi),
+        ),
+        commit_fn=commit_fn,
     )
-    guard = _CommitGuard(
-        has_metadata=bool(extra_actions),
-        read_files=set(candidates),
-        predicate=(snap.physical(keys[0]), lo, hi),
-        ict=_ict_on(snap.configuration),
-    )
-    return (commit_fn or _commit)(table_path, actions, guard, snap.version)
 
 
 def _dv_matched_blobs(
@@ -5438,11 +5147,12 @@ def _dv_mark_actions(
     table_path: str,
     snap: DeltaSnapshot,
     per_file: dict[str, tuple[bytes, int]],
-    now_ms: int,
-) -> list[dict[str, Any]]:
-    """Protocol upgrade (first DV write) + remove/re-add actions that
-    attach a deletionVector descriptor to each affected file, from
-    pre-serialized (blob, cardinality) pairs. Tiny bitmaps travel
+) -> tuple[dict[str, Any] | None, list[dict[str, Any]]]:
+    """(protocol upgrade on the first DV write or None, re-add payloads)
+    attaching a deletionVector descriptor to each affected file, from
+    pre-serialized (blob, cardinality) pairs; each re-add replaces the
+    file's current add, whose remove the caller commits. The data file
+    itself is untouched, so its modificationTime stays. Tiny bitmaps travel
     INLINE in the log (storageType "i") — no side file, the same
     small-DV optimization real writers apply; larger ones share one
     on-disk DV file."""
@@ -5457,29 +5167,11 @@ def _dv_mark_actions(
     descriptors = dict(inline)
     if on_disk:
         descriptors.update(write_dv_file_blobs(table_path, on_disk))
-    actions: list[dict[str, Any]] = []
-    feats = set(snap.protocol.get("readerFeatures") or [])
-    if "deletionVectors" not in feats:
-        feats, wfeats = _explicit_features(snap)
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(feats | {"deletionVectors"}),
-                    "writerFeatures": sorted(wfeats | {"deletionVectors"}),
-                }
-            }
-        )
-    for rel, desc in descriptors.items():
-        old_add = snap.files[rel]
-        actions.append(_remove_action(old_add, now_ms, True))
-        new_add = dict(old_add)
-        new_add["deletionVector"] = desc
-        new_add["dataChange"] = True
-        new_add["modificationTime"] = now_ms
-        actions.append({"add": new_add})
-    return actions
+    readds = [
+        dict(snap.files[rel], deletionVector=desc, dataChange=True)
+        for rel, desc in descriptors.items()
+    ]
+    return _rw_feature_protocol(snap, {"deletionVectors"}), readds
 
 
 def delete_delta_dv(
@@ -5513,34 +5205,30 @@ def delete_delta_dv(
     if not per_file:
         return snap.version, 0
 
-    now_ms = int(time.time() * 1000)
-    actions = _dv_mark_actions(table_path, snap, per_file, now_ms)
+    protocol, readds = _dv_mark_actions(table_path, snap, per_file)
     pred = F.col(col).isNotNull() & F.col(col).between(lo, hi)
+    cdc: list[dict[str, Any]] = []
     if _cdf_enabled(snap):
         deleted_rows = _scan_files(
             spark, table_path, snap, list(per_file)
         ).filter(pred).withColumn("_change_type", F.lit("delete"))
         nbytes = _files_bytes(snap, list(per_file))
-        actions.extend(_stage_cdf(deleted_rows, table_path, snap, nbytes))
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DELETE",
-                "operationParameters": {
-                    "predicate": f"{col} BETWEEN {lo} AND {hi}",
-                    "deletionVectors": "true",
-                },
-            }
-        }
+        cdc = _stage_cdf(deleted_rows, table_path, snap, nbytes)
+    v = _author_commit(
+        table_path, snap, operation="DELETE",
+        params={
+            "predicate": f"{col} BETWEEN {lo} AND {hi}",
+            "deletionVectors": "true",
+        },
+        adds=readds, removes=[snap.files[rel] for rel in per_file],
+        protocol=protocol, extra=cdc,
+        guard=_CommitGuard(
+            removed=set(per_file),
+            read_files=set(candidates),
+            predicate=(snap.physical(col), lo, hi),
+        ),
     )
-    guard = _CommitGuard(
-        removed=set(per_file),
-        read_files=set(candidates),
-        predicate=(snap.physical(col), lo, hi),
-    )
-    guard.ict = _ict_on(snap.configuration)
-    return _commit(table_path, actions, guard, snap.version), len(per_file)
+    return v, len(per_file)
 
 
 def update_delta_dv(
@@ -5587,41 +5275,28 @@ def update_delta_dv(
         _phys_partition_cols(snap),
     )
 
-    now_ms = int(time.time() * 1000)
-    actions = _dv_mark_actions(table_path, snap, per_file, now_ms)
-    stat_cols = _phys_stat_cols(snap)
-    for rel in added:
-        actions.append(
-            _add_action(
-                table_path, rel, _phys_partition_cols(snap), stat_cols, now_ms
-            )
-        )
+    protocol, readds = _dv_mark_actions(table_path, snap, per_file)
+    cdc: list[dict[str, Any]] = []
     if _cdf_enabled(snap):
         pre = matched.withColumn("_change_type", F.lit("update_preimage"))
         post = updated.withColumn("_change_type", F.lit("update_postimage"))
         nbytes = _files_bytes(snap, list(per_file))
-        actions.extend(
-            _stage_cdf(pre.unionByName(post), table_path, snap, nbytes)
-        )
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "UPDATE",
-                "operationParameters": {
-                    "predicate": f"{col} BETWEEN {lo} AND {hi}",
-                    "deletionVectors": "true",
-                },
-            }
-        }
+        cdc = _stage_cdf(pre.unionByName(post), table_path, snap, nbytes)
+    v = _author_commit(
+        table_path, snap, operation="UPDATE",
+        params={
+            "predicate": f"{col} BETWEEN {lo} AND {hi}",
+            "deletionVectors": "true",
+        },
+        adds=readds + added, removes=[snap.files[rel] for rel in per_file],
+        protocol=protocol, extra=cdc,
+        guard=_CommitGuard(
+            removed=set(per_file),
+            read_files=set(candidates),
+            predicate=(snap.physical(col), lo, hi),
+        ),
     )
-    guard = _CommitGuard(
-        removed=set(per_file),
-        read_files=set(candidates),
-        predicate=(snap.physical(col), lo, hi),
-    )
-    guard.ict = _ict_on(snap.configuration)
-    return _commit(table_path, actions, guard, snap.version), len(per_file)
+    return v, len(per_file)
 
 
 # --------------------------------------------------------------------------

@@ -3,9 +3,16 @@ flagship queries, as evidence for the plan-shape claims in SCALE.md."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too; they inherit PYTHONPATH
+# from the JVM, which takes this process's environment when it starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from mergermetrics_lakehouse_pipeline_spark import registry  # noqa: E402
 from mergermetrics_lakehouse_pipeline_spark.session import get_spark  # noqa: E402
@@ -98,7 +105,7 @@ def main() -> None:
         plan = df._jdf.queryExecution().executedPlan().toString()
         plan = plan.split("== Initial Plan ==")[0].rstrip().rstrip("+-").rstrip()
         out.append(f"## {name}\n\n*{note}*\n\n```\n{plan}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md written")
 

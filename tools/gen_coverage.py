@@ -3,9 +3,11 @@ module + test. Run after adding registry entries."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from mergermetrics_lakehouse_pipeline_spark import registry  # noqa: E402
 
@@ -315,7 +317,7 @@ def main() -> None:
 
     n_total = len(registry.QUERIES)
     n_oracle = sum(1 for q in registry.QUERIES if q.oracle is not None)
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(os.path.join(ROOT, "COVERAGE.md"), "w") as f:
         f.write(
             f"""# COVERAGE — SURVEY §2 operator inventory → engine artifacts
 
@@ -344,7 +346,7 @@ def ledger() -> str:
     import json
 
     verified: dict[str, tuple[str, str]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = path.split("CORRECTNESS_")[1].split(".json")[0]
         for name, row in json.load(open(path)).items():
             if name in verified:

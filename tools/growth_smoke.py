@@ -23,11 +23,18 @@ Prints one JSON line per measurement; SCALE.md records the table.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too; they inherit PYTHONPATH
+# from the JVM, which takes this process's environment when it starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from pyspark.sql import DataFrame, Window, functions as F  # noqa: E402
 

@@ -14,9 +14,16 @@ from __future__ import annotations
 
 import json
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too; they inherit PYTHONPATH
+# from the JVM, which takes this process's environment when it starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from mergermetrics_lakehouse_pipeline_spark import registry  # noqa: E402
 from mergermetrics_lakehouse_pipeline_spark.session import get_spark  # noqa: E402
@@ -59,7 +66,7 @@ def main() -> None:
             out[q.name] = fingerprint(plan)
         except Exception as e:  # noqa: BLE001
             print(f"SKIP {q.name}: {type(e).__name__}: {e}")
-    with open("/root/repo/PLAN_FP.json", "w") as fh:
+    with open(os.path.join(ROOT, "PLAN_FP.json"), "w") as fh:
         json.dump(out, fh, indent=0, sort_keys=True)
     print(f"PLAN_FP.json: {len(out)} fingerprints")
 

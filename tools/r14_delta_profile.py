@@ -12,7 +12,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too; they inherit PYTHONPATH
+# from the JVM, which takes this process's environment when it starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from mergermetrics_lakehouse_pipeline_spark.scratch import scratch_dir  # noqa: E402
 from mergermetrics_lakehouse_pipeline_spark.session import get_spark  # noqa: E402

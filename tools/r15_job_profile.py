@@ -13,11 +13,18 @@ Usage: python tools/r15_job_profile.py <query_name> [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too; they inherit PYTHONPATH
+# from the JVM, which takes this process's environment when it starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from mergermetrics_lakehouse_pipeline_spark import registry  # noqa: E402
 from mergermetrics_lakehouse_pipeline_spark.session import get_spark  # noqa: E402

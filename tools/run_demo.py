@@ -8,10 +8,17 @@ Usage: python tools/run_demo.py [workdir]
 from __future__ import annotations
 
 import pathlib
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python UDF workers import the package too; they inherit PYTHONPATH
+# from the JVM, which takes this process's environment when it starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from pyspark.sql import functions as F  # noqa: E402
 

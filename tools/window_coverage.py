@@ -14,9 +14,11 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from mergermetrics_lakehouse_pipeline_spark import registry  # noqa: E402
 
@@ -25,7 +27,7 @@ WINDOW = 50
 
 def main() -> None:
     verified: dict[str, str] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = path.split("CORRECTNESS_")[1].split(".json")[0]
         for name, row in json.load(open(path)).items():
             # verified = hash-matched, or a rows-only row that ran
