@@ -18,11 +18,15 @@ Each query cites the SURVEY §2 row(s) it covers.
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .functions.cleaning import (
     dedupe_by_keys,
@@ -51,12 +55,67 @@ def _defensive_confs(spark: SparkSession) -> None:
             pass
 
 
+#: the confs that change which Spark type a parquet column infers to
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+#: inferred schemas kept, least recently used dropped first
+_SCHEMA_MEMO_SIZE = 256
+_schema_memo: OrderedDict[tuple, StructType] = OrderedDict()
+_schema_memo_lock = threading.Lock()
+
+
+def _files_key(path: str) -> tuple | None:
+    """(name, size, mtime_ns) of every file at ``path``, a file or a
+    directory tree; None when ``path`` is not on the local disk."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema-inference job on
+    repeat reads.
+
+    Inference runs one Spark job per plain read. Its result is memoized,
+    keyed by every file's (name, size, mtime) and the inference confs,
+    and later reads hand it to the reader. Only the schema is shared:
+    every call returns a fresh DataFrame, so the two sides of a
+    self-join still get distinct attribute ids."""
+    files = _files_key(path)
+    if files is None:
+        return spark.read.parquet(path)
+    key = (path, files, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    with _schema_memo_lock:
+        schema = _schema_memo.get(key)
+        if schema is not None:
+            _schema_memo.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schema_memo_lock:
+        _schema_memo[key] = df.schema
+        while len(_schema_memo) > _SCHEMA_MEMO_SIZE:
+            _schema_memo.popitem(last=False)
+    return df
+
+
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver testdata parquet table (S1/S7 analogue)."""
     _defensive_confs(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:

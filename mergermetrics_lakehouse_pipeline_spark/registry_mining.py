@@ -236,9 +236,7 @@ def q_copurchase_reachability_rec(spark: SparkSession, sf_dir: str) -> DataFrame
     gr.copurchase_edges(T(spark, sf_dir, "lineitem")).createOrReplaceTempView(
         "copurchase_edges_rec"
     )
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
-        "lineitem_rec"
-    )
+    T(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_rec")
     return spark.sql(
         _REACH_SQL.format(edges="copurchase_edges_rec").replace(
             "FROM lineitem", "FROM lineitem_rec"

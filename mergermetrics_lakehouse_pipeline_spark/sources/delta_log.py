@@ -549,8 +549,13 @@ def _explicit_features(snap: DeltaSnapshot) -> tuple[set[str], set[str]]:
 
 def _implied_writer_features(writer_v: int) -> set[str]:
     """Writer features a legacy (pre-7) writer version implies — the
-    spec's cumulative ladder."""
+    spec's cumulative ladder. A writer-7 protocol implies nothing: it
+    lists every feature it uses, and re-stating the ladder there would
+    make a spec-following writer support features the table never
+    used."""
     feats: set[str] = set()
+    if writer_v >= 7:
+        return feats
     if writer_v >= 2:
         feats |= {"appendOnly", "invariants"}
     if writer_v >= 3:
@@ -888,21 +893,33 @@ def _subtract_dv_rows(
     return df if keep_positions else df.drop("__fp", "__ri")
 
 
+def _quote(name: str) -> str:
+    """``name`` as a back-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _select_logical(
     df: DataFrame, snap: DeltaSnapshot, extra: list[str] = ()
 ) -> DataFrame:
-    """Project to the committed LOGICAL schema: physical parquet names
-    aliased back (column mapping), files predating a column fill NULL,
-    column order pinned."""
-    cols = []
-    for f in snap.schema.fields:
-        phys = snap.physical(f.name)
-        if phys in df.columns:
-            cols.append(F.col(phys).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    cols.extend(F.col(c) for c in extra)
-    return df.select(*cols)
+    """Project a ``_raw_reader`` scan to the committed LOGICAL schema:
+    physical parquet names renamed back (column mapping), column order
+    pinned, ``extra`` columns last. The read schema is explicit, so
+    every field is already in the scan (files predating a column
+    NULL-fill there). A scan already in logical shape, as every
+    unpartitioned name-mode table's is, comes back as it is; otherwise
+    the projection is one ``selectExpr``, not one Column per field
+    (each Column built through py4j costs dozens of round trips)."""
+    names = [f.name for f in snap.schema.fields]
+    phys = [snap.physical(n) for n in names]
+    if phys == names and df.columns == names + list(extra):
+        return df
+    return df.selectExpr(
+        *[
+            _quote(p) if p == n else f"{_quote(p)} AS {_quote(n)}"
+            for p, n in zip(phys, names)
+        ],
+        *[_quote(c) for c in extra],
+    )
 
 
 def _to_physical(
@@ -1144,7 +1161,7 @@ def _scan_files(
     spark: SparkSession, table_path: str, snap: DeltaSnapshot, rels: list[str]
 ) -> DataFrame:
     """One distributed parquet scan over ``rels`` with every reader
-    feature applied: mergeSchema NULL-fill, basePath hive-partition
+    feature applied: read-schema NULL-fill, basePath hive-partition
     recovery, field-id resolution (id-mode column mapping),
     deletion-vector row anti-join, physical->logical rename.
 
@@ -2415,6 +2432,7 @@ def write_delta(
             (generated, "generated columns are declared at table creation"),
             (identity, "identity columns are declared at table creation"),
             (cluster_by, "clustering columns are declared at table creation"),
+            (column_defaults, "column defaults are declared at table creation"),
         ):
             if arg is not None:
                 raise DeltaProtocolError(why)
@@ -3601,8 +3619,8 @@ def rename_column(
 def drop_column(spark: SparkSession, table_path: str, col: str) -> int:
     """ALTER TABLE ... DROP COLUMN — metadata-only under column mapping
     (name mode): the field leaves the logical schema; its physical
-    parquet column stays in the data files but is never projected
-    (_select_logical reads only mapped fields). The column id is NOT
+    parquet column stays in the data files but is never read (the read
+    schema holds only mapped fields). The column id is NOT
     reused (maxColumnId is monotone), so a later ADD COLUMN of the same
     logical name maps to a FRESH physical column and old values do not
     resurface — the protocol's re-add safety property."""
@@ -3651,7 +3669,7 @@ def add_column(
 ) -> int:
     """ALTER TABLE ... ADD COLUMN (nullable) — metadata-only on ANY
     table: existing files simply lack the column and scans NULL-fill it
-    (_select_logical), exactly Delta's behavior. Under column mapping
+    (the explicit read schema), exactly Delta's behavior. Under column mapping
     the new field gets a fresh id/physical name past maxColumnId.
     ``data_type`` is a DataType or a DDL string ("decimal(12,2)").
 
@@ -3934,7 +3952,11 @@ def _file_stats(full_path: str, stat_cols: list[str]) -> dict | None:
             for rg in range(md.num_row_groups):
                 st = md.row_group(rg).column(col_idx).statistics
                 if st is None or not st.has_min_max:
-                    return None  # stats unavailable -> no skipping claim
+                    # no footer min/max (INT96 timestamps, all-NULL
+                    # columns): this column makes no skipping claim,
+                    # the others still do
+                    lo = None
+                    break
                 lo = st.min if lo is None else min(lo, st.min)
                 hi = st.max if hi is None else max(hi, st.max)
             if lo is not None:

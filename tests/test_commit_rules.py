@@ -142,3 +142,21 @@ def test_restore_undoes_deletion_vectors(spark, tbl):
     assert not any(
         a.get("deletionVector") for a in snapshot(spark, tbl).files.values()
     )
+
+
+def test_writer7_protocol_upgrade_adds_only_the_new_feature(spark, tbl):
+    """A writer-7 protocol lists every feature the table uses; the first
+    deletion-vector DELETE adds ``deletionVectors`` and nothing from the
+    legacy writer-version ladder."""
+    write_delta(
+        spark.range(4).select(F.col("id").alias("k")).coalesce(1), tbl,
+        configuration={"delta.enableRowTracking": "true"},
+    )
+    before = snapshot(spark, tbl).protocol
+    assert before["minWriterVersion"] == 7
+    delete_delta_dv(spark, tbl, "k", 0, 0)
+    after = snapshot(spark, tbl).protocol
+    assert after["readerFeatures"] == ["deletionVectors"]
+    assert set(after["writerFeatures"]) == (
+        set(before["writerFeatures"]) | {"deletionVectors"}
+    )

@@ -163,10 +163,10 @@ PLAIN = [
         "op": "WRITE", "params": {"mode": "OVERWRITE", "predicate": "dynamic"},
     }),
     ("delete (copy-on-write)", {
-        # the survivor file lacks min/max for the all-NULL column w, so
-        # it carries no stats at all
+        # the survivor file lacks min/max for the all-NULL column w; its
+        # stats leave out only that column
         "kinds": {"add": 1, "cdc": 1, "commitInfo": 1, "remove": 1},
-        "adds": [(True, _PV_B, False, None, None)],
+        "adds": [(True, _PV_B, True, None, None)],
         "removes": [(True, _PV_B, False, None, None)],
         "guard": _g(removed=1, read_files=1, predicate=["k", 7, 7]),
         "op": "DELETE", "params": {"predicate": "k BETWEEN 7 AND 7"},
@@ -240,10 +240,11 @@ def test_plain_table_commit_shapes(spark, tmp_path, guards):
     _check(t, guards, PLAIN)
 
 
+# a writer-4 table re-states its legacy features when it moves to
+# writer 7; a writer-7 table already lists every feature it uses, so a
+# later upgrade adds only the new one
 _LEGACY_W4 = ["appendOnly", "changeDataFeed", "checkConstraints",
               "generatedColumns", "invariants"]
-# a writer-7 table re-states every legacy feature on upgrade
-_V7_RESTATED = sorted(_LEGACY_W4 + ["columnMapping", "identityColumns"])
 
 DV_AND_REPLACE = [
     ("overwrite", {
@@ -273,7 +274,7 @@ DV_AND_REPLACE = [
         "removes": [(True, _PV_A, False, None, None)],
         "guard": _g(removed=1, read_files=1, predicate=["k", 0, 0]),
         "protocol": (3, 7, ["deletionVectors", "vacuumProtocolCheck"],
-                     sorted(_V7_RESTATED
+                     sorted(_LEGACY_W4
                             + ["deletionVectors", "vacuumProtocolCheck"])),
         "op": "DELETE",
         "params": {"predicate": "k BETWEEN 0 AND 0", "deletionVectors": "true"},
@@ -303,7 +304,7 @@ CLONE = [
         "adds": [(True, [], True, None, None)],
         "removes": [], "guard": _g(),
         "protocol": (3, 7, ["deletionVectors", "vacuumProtocolCheck"],
-                     sorted(_V7_RESTATED
+                     sorted(_LEGACY_W4
                             + ["deletionVectors", "vacuumProtocolCheck"])),
         "same_id": False, "conf": _CDF_CONF,
         "op": "CLONE", "params": {"source": "<src>"},
@@ -375,9 +376,8 @@ ROW_TRACKING = [
         "removes": [(True, [], False, None, None)],
         "guard": _g(removed=1, read_files=1, predicate=["k", 0, 0], ict=True),
         "protocol": (3, 7, ["deletionVectors"],
-                     sorted(_V7_RESTATED + [
-                         "deletionVectors", "domainMetadata",
-                         "inCommitTimestamp", "rowTracking"])),
+                     ["appendOnly", "deletionVectors", "domainMetadata",
+                      "inCommitTimestamp", "invariants", "rowTracking"]),
         "op": "DELETE",
         "params": {"predicate": "k BETWEEN 0 AND 0", "deletionVectors": "true"},
     }),

@@ -297,3 +297,16 @@ def test_default_on_column_mapped_table(spark, tbl):
     )
     out = {r["k"]: r["lvl"] for r in read_delta(spark, tbl).collect()}
     assert out[0] == out[1] == out[2] == 3 and out[3] == 8
+
+
+def test_column_defaults_rejected_on_existing_table(spark, tbl):
+    """Like configuration, generated and identity columns, defaults are
+    declared when the table is created; a later write that passes them
+    raises instead of committing without them."""
+    write_delta(_kv(spark, 0, 2), tbl, mode="overwrite")
+    for mode in ("append", "overwrite"):
+        with pytest.raises(DeltaProtocolError, match="declared at table creation"):
+            write_delta(
+                _kv(spark, 2, 4), tbl, mode=mode, column_defaults={"g": "0"}
+            )
+    assert snapshot(spark, tbl).version == 0

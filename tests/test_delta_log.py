@@ -594,3 +594,32 @@ def test_copy_on_write_update_rewrites_only_intersecting_files(spark, tbl):
     )
     assert _rows(got) == _rows(want)
     assert read_delta(spark, tbl, version=v - 1).count() == li.count()
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [
+        # Spark writes TIMESTAMP as INT96, whose footer has no min/max
+        "CAST('2024-01-01 00:00:00' AS TIMESTAMP)",
+        "CAST(NULL AS BIGINT)",
+    ],
+    ids=["int96_timestamp", "all_null_bigint"],
+)
+def test_stats_omit_only_columns_without_footer_min_max(spark, tbl, extra):
+    """A column whose footer has no min/max is left out of the file's
+    stats; the other columns keep theirs, so a probe on ``k`` still
+    skips the file."""
+    from mergermetrics_lakehouse_pipeline_spark.sources.delta_log import (
+        prune_files_by_stats,
+    )
+
+    df = spark.range(100).selectExpr("id AS k", f"{extra} AS x")
+    write_delta(df.coalesce(1), tbl, mode="overwrite")
+    snap = snapshot(spark, tbl)
+    (add,) = snap.files.values()
+    stats = json.loads(add["stats"])
+    assert stats == {
+        "numRecords": 100, "minValues": {"k": 0}, "maxValues": {"k": 99},
+    }
+    assert prune_files_by_stats(snap, "k", 500, 600) == ([], 1)
+    assert prune_files_by_stats(snap, "x", None, None)[1] == 0
