@@ -1,14 +1,11 @@
 """Arithmetic-coded JPEG (ITU-T T.81 Annex D QM-coder + Annex F
-statistical models) — encode and decode, no codec libraries.
-
-Round-11 closes the last practical gap in the JPEG family (VERDICT r10
-next-step #4): sequential DCT with ARITHMETIC entropy coding (SOF9
-frames, DAC conditioning segments) for both single-component
-(luminance) and 3-component YCbCr streams, sharing the forward/inverse
-DCT + quantization pipeline with operators/jpeg.py so an
-arithmetic-coded stream decodes BYTE-EQUAL to the Huffman baseline
-carrying the same quantized coefficients — the coefficient-transport
-oracle trick the progressive codec established in round 10.
+statistical models): the entropy coder of SOF9 streams (extended
+sequential DCT, arithmetic coding, DAC conditioning segments), encode
+and decode, for single-component (luminance) and 3-component YCbCr
+streams, no codec libraries. The forward path, framing, marker walk,
+data-unit order and pixel rebuild are jpeg.py's, so an arithmetic-coded
+stream carries the same quantized coefficients as the Huffman baseline
+and decodes BYTE-EQUAL to it.
 
 What is implemented from the public spec:
 
@@ -39,30 +36,18 @@ and the codec's self-consistency over randomized decision sequences,
 and the roundtrip oracle (media_jpeg_arith_roundtrip) pins the decode
 byte-equal to the Huffman baseline. Cross-implementation byte-level
 interop is unverifiable in this container (no libjpeg/PIL present).
-
-Everything here runs EXECUTOR-side inside the multimodal Arrow batches
-(operators/multimodal.py routes SOF9 streams to jpeg_arith_decode);
-the entropy walk is the sequential part the format forces, while
-dequant + IDCT reuse jpeg.py's vectorized einsum forms.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from .jpeg import (
-    STD_CHROMA_QUANT,
-    STD_LUMA_QUANT,
-    ZIGZAG,
-    _DCT_M,
-    _parse_headers,
-    _plane_zigzag_blocks,
-    _rgb_to_ycbcr,
-    _ycbcr_to_rgb,
-    _ZZ_COLS,
-    _ZZ_ROWS,
+    _grids_to_pixels,
+    _parse_frame,
+    _seg,
+    _sequential_encode,
+    _sequential_grids,
 )
 
 # ---------------------------------------------------------------------------
@@ -324,7 +309,7 @@ class QMDecoder:
 
     def decode(self, stats: bytearray, i: int) -> int:
         """Decode one decision against ``stats[i]`` (F.2.4 DECODE with
-        MPS_EXCHANGE/LPS_EXCHANGE), mirroring QMEncoder.encode."""
+        MPS_EXCHANGE/LPS_EXCHANGE), the inverse of QMEncoder.encode."""
         sv = stats[i]
         qe, nlps, nmps, switch = QE_TABLE[sv & 0x7F]
         mps = sv >> 7
@@ -560,17 +545,88 @@ def _decode_ac(dec: QMDecoder, stats: bytearray, kx: int) -> list[int]:
 # ---------------------------------------------------------------------------
 
 
-def _seg(marker: int, body: bytes) -> bytes:
-    return struct.pack(">HH", marker, len(body) + 2) + body
+class _ArithEncoder:
+    """QM-coder entropy encoder of one sequential scan: statistics per
+    conditioning table, DC predictor and context per component. Per
+    F.1.4 a restart REINITIALIZES the coder and resets every statistics
+    area (Huffman restarts only reset DC predictors)."""
+
+    def __init__(self, tqs: list[int], dc_l: int, dc_u: int, kx: int):
+        self.tqs, self.dc_l, self.dc_u, self.kx = tqs, dc_l, dc_u, kx
+        self.lo, self.hi = (1 << dc_l) >> 1, (1 << dc_u) >> 1
+        self.parts: list[bytes] = []
+        self._reset()
+
+    def _reset(self) -> None:
+        self.enc = QMEncoder()
+        self.dc = {tq: bytearray(_DC_STAT_BINS) for tq in self.tqs}
+        self.ac = {tq: bytearray(_AC_STAT_BINS) for tq in self.tqs}
+        self.prev: dict[int, int] = {}
+        self.ctx: dict[int, int] = {}
+
+    def block(self, comp: tuple, zz: list[int]) -> None:
+        cid, tq = comp[0], comp[3]
+        self.ctx[cid] = _encode_dc(
+            self.enc, self.dc[tq], self.ctx.get(cid, 0),
+            zz[0] - self.prev.get(cid, 0), self.lo, self.hi,
+        )
+        self.prev[cid] = zz[0]
+        _encode_ac(self.enc, self.ac[tq], zz, self.kx)
+
+    def restart(self, m: int) -> None:
+        self.parts += [self.enc.finish(), bytes([0xFF, 0xD0 | m])]
+        self._reset()
+
+    def tables(self) -> bytes:
+        """One DAC segment: (Tc<<4|Tb, Cs) per DC and AC table."""
+        cs_dc = (self.dc_u << 4) | self.dc_l
+        return _seg(0xFFCC, bytes(
+            b for tq in self.tqs for b in (tq, cs_dc, 0x10 | tq, self.kx)
+        ))
+
+    def finish(self) -> bytes:
+        return b"".join(self.parts) + self.enc.finish()
 
 
-def _dac_body(tables: list[tuple[int, int, int]]) -> bytes:
-    """DAC entries (B.2.4.3): (Tc, Tb, Cs) triples -> Tc<<4|Tb, Cs."""
-    out = bytearray()
-    for tc, tb, cs in tables:
-        out.append((tc << 4) | tb)
-        out.append(cs)
-    return bytes(out)
+class _ArithDecoder:
+    """QM-coder entropy decoder of one sequential scan; conditioning
+    from the scan's DAC entries, spec defaults for tables without one."""
+
+    def __init__(self, scan: dict):
+        self.data = scan["data"]
+        self.bounds: dict[int, tuple[int, int]] = {}
+        self.kx: dict[int, int] = {}
+        for _cid, td, ta in scan["comps"]:
+            cs = scan["cond"].get((0, td), (DC_U_DEFAULT << 4) | DC_L_DEFAULT)
+            self.bounds[td] = ((1 << (cs & 0x0F)) >> 1, (1 << (cs >> 4)) >> 1)
+            self.kx[ta] = scan["cond"].get((1, ta), AC_KX_DEFAULT)
+        self._reset(0)
+
+    def _reset(self, pos: int) -> None:
+        self.dec = QMDecoder(self.data, pos)
+        self.dc = {td: bytearray(_DC_STAT_BINS) for td in self.bounds}
+        self.ac = {ta: bytearray(_AC_STAT_BINS) for ta in self.kx}
+        self.pred: dict[int, int] = {}
+        self.ctx: dict[int, int] = {}
+
+    def block(self, cid: int, td: int, ta: int) -> list[int]:
+        diff, self.ctx[cid] = _decode_dc(
+            self.dec, self.dc[td], self.ctx.get(cid, 0), *self.bounds[td]
+        )
+        self.pred[cid] = self.pred.get(cid, 0) + diff
+        zz = _decode_ac(self.dec, self.ac[ta], self.kx[ta])
+        zz[0] = self.pred[cid]
+        return zz
+
+    def restart(self, m: int) -> None:
+        mk, end = self.dec.find_marker()
+        if not (0xD0 <= mk <= 0xD7) or (mk & 7) != m:
+            raise ValueError(f"restart marker out of sequence: {hex(mk)}")
+        self._reset(end)
+
+
+def _arith_grids(hdr: dict) -> dict[int, np.ndarray]:
+    return _sequential_grids(hdr, _ArithDecoder)
 
 
 def jpeg_gray_encode_arith(
@@ -581,329 +637,51 @@ def jpeg_gray_encode_arith(
     restart_interval: int = 0,
 ) -> bytes:
     """Encode an HxW uint8 grayscale matrix as an SOF9 (extended
-    sequential, arithmetic-coded) JFIF stream. The forward path (level
-    shift, FDCT, Annex-K luminance quantization, zigzag) is shared with
-    jpeg_gray_encode so the quantized coefficients — and therefore the
-    decoded pixels — are IDENTICAL to the Huffman baseline's; only the
-    entropy layer differs. ``dc_l``/``dc_u`` (0 <= L <= U <= 15) and
-    ``kx`` (1-63) are the DAC conditioning parameters — non-default
-    values change the context allocation on BOTH sides, so they
-    exercise the DAC segment for real. ``restart_interval`` > 0 emits
-    DRI + RSTm markers every that-many MCUs: per F.1.4 the arithmetic
-    coder is REINITIALIZED and every statistics area reset at each
-    restart (unlike Huffman restarts, which only reset DC
-    predictors)."""
+    sequential, arithmetic-coded) JFIF stream. The quantized
+    coefficients — and therefore the decoded pixels — are IDENTICAL to
+    jpeg_gray_encode's; only the entropy layer differs. ``dc_l``/``dc_u``
+    (0 <= L <= U <= 15) and ``kx`` (1-63) are the DAC conditioning
+    parameters — non-default values change the context allocation on
+    BOTH sides, so they exercise the DAC segment for real.
+    ``restart_interval`` > 0 emits DRI + RSTm markers every that-many
+    MCUs."""
     if not (0 <= dc_l <= dc_u <= 15):
         raise ValueError("DC conditioning requires 0 <= L <= U <= 15")
     if not (1 <= kx <= 63):
         raise ValueError("AC conditioning requires 1 <= Kx <= 63")
     px = np.asarray(pixels, dtype=np.uint8)
-    h, w = px.shape
-    bh, bw = -(-h // 8), -(-w // 8)
-    padded = np.pad(px, ((0, bh * 8 - h), (0, bw * 8 - w)), mode="edge")
-
-    enc = QMEncoder()
-    dc_stats = bytearray(_DC_STAT_BINS)
-    ac_stats = bytearray(_AC_STAT_BINS)
-    lo, hi = (1 << dc_l) >> 1, (1 << dc_u) >> 1
-    q = STD_LUMA_QUANT.astype(np.float64)
-    ctx = 0
-    prev = 0
-    mcu = 0
-    parts: list[bytes] = []
-    for by in range(bh):
-        for bx in range(bw):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                # F.1.4: coder reinit + ALL statistics reset at RSTm
-                parts.append(enc.finish())
-                parts.append(
-                    bytes([0xFF, 0xD0 | ((mcu // restart_interval - 1) & 7)])
-                )
-                enc = QMEncoder()
-                dc_stats = bytearray(_DC_STAT_BINS)
-                ac_stats = bytearray(_AC_STAT_BINS)
-                ctx = 0
-                prev = 0
-            mcu += 1
-            # per-block matrix DCT, NOT the einsum batch: the two sum
-            # in different orders and a last-ulp difference can cross
-            # an rint boundary (r10 parity lesson) — the gray Huffman
-            # encoder is per-block, and coefficient equality with it is
-            # this codec's oracle
-            block = padded[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8]
-            shifted = block.astype(np.float64) - 128.0
-            coeffs = _DCT_M @ shifted @ _DCT_M.T
-            quant = np.rint(coeffs / q).astype(np.int64)
-            zz = [int(quant[r, c]) for r, c in ZIGZAG]
-            ctx = _encode_dc(enc, dc_stats, ctx, zz[0] - prev, lo, hi)
-            prev = zz[0]
-            _encode_ac(enc, ac_stats, zz, kx)
-    parts.append(enc.finish())
-    data = b"".join(parts)
-
-    app0 = _seg(
-        0xFFE0, b"JFIF\x00\x01\x01\x00" + struct.pack(">HHBB", 1, 1, 0, 0)
+    if px.ndim != 2:
+        raise ValueError("jpeg_gray_encode_arith expects an HxW array")
+    return _sequential_encode(
+        px, "444", restart_interval, 0xFFC9,
+        lambda tqs: _ArithEncoder(tqs, dc_l, dc_u, kx),
     )
-    dqt = _seg(
-        0xFFDB, b"\x00" + bytes(int(STD_LUMA_QUANT[r][c]) for r, c in ZIGZAG)
-    )
-    sof = _seg(
-        0xFFC9, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])
-    )
-    dac = _seg(
-        0xFFCC,
-        _dac_body(
-            [
-                (0, 0, (dc_u << 4) | dc_l),
-                (1, 0, kx),
-            ]
-        ),
-    )
-    dri = (
-        _seg(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    sos = dri + _seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + app0 + dqt + sof + dac + sos + data + b"\xff\xd9"
 
 
 def jpeg_color_encode_arith(
     rgb: np.ndarray, subsampling: str = "420", restart_interval: int = 0
 ) -> bytes:
     """Encode an HxWx3 uint8 RGB image as a 3-component YCbCr SOF9
-    arithmetic-coded stream (4:2:0 / 4:2:2 / 4:4:4). Forward path
-    shared with jpeg_color_encode (same subsampling box filter, same
-    Annex-K quantization); conditioning table 0 for luma, table 1 for
-    chroma, mirroring the baseline's Huffman table split."""
+    arithmetic-coded stream (4:2:0 / 4:2:2 / 4:4:4) with the quantized
+    coefficients of jpeg_color_encode; conditioning table 0 for luma,
+    table 1 for chroma, both at the default conditioning."""
     rgb = np.asarray(rgb, dtype=np.uint8)
     if rgb.ndim != 3 or rgb.shape[2] != 3:
         raise ValueError("jpeg_color_encode_arith expects HxWx3 RGB")
-    if subsampling == "420":
-        hs, vs = 2, 2
-    elif subsampling == "422":
-        hs, vs = 2, 1
-    elif subsampling == "444":
-        hs, vs = 1, 1
-    else:
-        raise ValueError("subsampling must be '420', '422' or '444'")
-    h, w = rgb.shape[:2]
-    ph = -(-h // (8 * vs)) * (8 * vs)
-    pw = -(-w // (8 * hs)) * (8 * hs)
-    padded = np.pad(rgb, ((0, ph - h), (0, pw - w), (0, 0)), mode="edge")
-    y, cb, cr = _rgb_to_ycbcr(padded)
-    if hs == 2 or vs == 2:
-        cb = cb.reshape(ph // vs, vs, pw // hs, hs).mean(axis=(1, 3))
-        cr = cr.reshape(ph // vs, vs, pw // hs, hs).mean(axis=(1, 3))
-
-    ql = STD_LUMA_QUANT.astype(np.float64)
-    qc = STD_CHROMA_QUANT.astype(np.float64)
-    zz_y = _plane_zigzag_blocks(y, ql)
-    zz_cb = _plane_zigzag_blocks(cb, qc)
-    zz_cr = _plane_zigzag_blocks(cr, qc)
-
-    lo, hi = (1 << DC_L_DEFAULT) >> 1, (1 << DC_U_DEFAULT) >> 1
-    st = {
-        "enc": QMEncoder(),
-        "dc": {0: bytearray(_DC_STAT_BINS), 1: bytearray(_DC_STAT_BINS)},
-        "ac": {0: bytearray(_AC_STAT_BINS), 1: bytearray(_AC_STAT_BINS)},
-        "prev": [0, 0, 0],
-        "ctx": [0, 0, 0],
-    }
-    mcux, mcuy = pw // (8 * hs), ph // (8 * vs)
-
-    def reset() -> None:
-        st["enc"] = QMEncoder()
-        st["dc"] = {0: bytearray(_DC_STAT_BINS), 1: bytearray(_DC_STAT_BINS)}
-        st["ac"] = {0: bytearray(_AC_STAT_BINS), 1: bytearray(_AC_STAT_BINS)}
-        st["prev"] = [0, 0, 0]
-        st["ctx"] = [0, 0, 0]
-
-    def put(ci: int, tbl: int, zz_vec) -> None:
-        zz = [int(v) for v in zz_vec]
-        st["ctx"][ci] = _encode_dc(
-            st["enc"], st["dc"][tbl], st["ctx"][ci],
-            zz[0] - st["prev"][ci], lo, hi,
-        )
-        st["prev"][ci] = zz[0]
-        _encode_ac(st["enc"], st["ac"][tbl], zz, AC_KX_DEFAULT)
-
-    parts: list[bytes] = []
-    mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                # F.1.4: coder reinit + ALL statistics reset at RSTm
-                parts.append(st["enc"].finish())
-                parts.append(
-                    bytes([0xFF, 0xD0 | ((mcu // restart_interval - 1) & 7)])
-                )
-                reset()
-            mcu += 1
-            for by in range(vs):
-                for bx in range(hs):
-                    put(0, 0, zz_y[my * vs + by, mx * hs + bx])
-            put(1, 1, zz_cb[my, mx])
-            put(2, 1, zz_cr[my, mx])
-    parts.append(st["enc"].finish())
-    data = b"".join(parts)
-
-    app0 = _seg(
-        0xFFE0, b"JFIF\x00\x01\x01\x00" + struct.pack(">HHBB", 1, 1, 0, 0)
-    )
-    dqt = _seg(
-        0xFFDB, b"\x00" + bytes(int(STD_LUMA_QUANT[r][c]) for r, c in ZIGZAG)
-    ) + _seg(
-        0xFFDB, b"\x01" + bytes(int(STD_CHROMA_QUANT[r][c]) for r, c in ZIGZAG)
-    )
-    sof = _seg(
-        0xFFC9,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, (hs << 4) | vs, 0])
-        + bytes([2, 0x11, 1])
-        + bytes([3, 0x11, 1]),
-    )
-    cs_dc = (DC_U_DEFAULT << 4) | DC_L_DEFAULT
-    dac = _seg(
-        0xFFCC,
-        _dac_body(
-            [
-                (0, 0, cs_dc),
-                (1, 0, AC_KX_DEFAULT),
-                (0, 1, cs_dc),
-                (1, 1, AC_KX_DEFAULT),
-            ]
+    return _sequential_encode(
+        rgb, subsampling, restart_interval, 0xFFC9,
+        lambda tqs: _ArithEncoder(
+            tqs, DC_L_DEFAULT, DC_U_DEFAULT, AC_KX_DEFAULT
         ),
     )
-    dri = (
-        _seg(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    sos = dri + _seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    return b"\xff\xd8" + app0 + dqt + sof + dac + sos + data + b"\xff\xd9"
 
 
 def jpeg_arith_decode(payload: bytes) -> tuple[int, int, np.ndarray]:
     """Decode an SOF9 arithmetic-coded sequential JPEG (1 or 3
     components, sampling factors 1-2 per axis); returns (width, height,
     HxW uint8 matrix) for single-component streams and (width, height,
-    HxWx3 uint8 RGB) for color. The MCU walk is the general interleaved
-    form jpeg_color_decode uses; dequant + IDCT are the same vectorized
-    einsum, so pixels match the Huffman decode of identical
-    coefficients byte-for-byte. Restart intervals (DRI/RSTn) decode
+    HxWx3 uint8 RGB) for colour. Restart intervals (DRI/RSTn) decode
     with the modulo-8 sequence verified; per F.1.4 each interval gets
     a fresh coder AND fresh statistics areas."""
-    hdr = _parse_headers(payload)
-    if hdr.get("frame") != 0xC9:
-        raise ValueError("not an arithmetic-coded sequential stream")
-    comps = hdr["comps"]
-    width, height = hdr["width"], hdr["height"]
-    quant, scan = hdr["quant"], hdr["scan"]
-    cond = hdr["arith_cond"]
-
-    by_cid = {c[0]: c for c in comps}
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-width // (8 * hmax))
-    mcuy = -(-height // (8 * vmax))
-
-    dec = QMDecoder(payload, hdr["data_start"])
-    dc_stats: dict[int, bytearray] = {}
-    ac_stats: dict[int, bytearray] = {}
-    dc_cond: dict[int, tuple[int, int]] = {}
-    ac_kx: dict[int, int] = {}
-    for cid, td, ta in scan:
-        if td not in dc_stats:
-            dc_stats[td] = bytearray(_DC_STAT_BINS)
-            cs = cond.get((0, td), (DC_U_DEFAULT << 4) | DC_L_DEFAULT)
-            l_, u_ = cs & 0x0F, cs >> 4
-            dc_cond[td] = ((1 << l_) >> 1, (1 << u_) >> 1)
-        if ta not in ac_stats:
-            ac_stats[ta] = bytearray(_AC_STAT_BINS)
-            ac_kx[ta] = cond.get((1, ta), AC_KX_DEFAULT)
-
-    grids: dict[int, np.ndarray] = {
-        cid: np.zeros((mcuy * vf, mcux * hf, 64), dtype=np.int32)
-        for cid, hf, vf, _tq in comps
-    }
-    prev_dc = {cid: 0 for cid, *_rest in comps}
-    ctx = {cid: 0 for cid, *_rest in comps}
-    ri = hdr["restart_interval"]
-    mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if ri and mcu and mcu % ri == 0:
-                mk, end = dec.find_marker()
-                if not (0xD0 <= mk <= 0xD7) or (mk & 7) != (
-                    (mcu // ri - 1) & 7
-                ):
-                    raise ValueError(
-                        f"restart marker out of sequence: {hex(mk)}"
-                    )
-                # F.1.4: fresh coder + fresh statistics + fresh
-                # predictors/contexts per restart interval
-                dec = QMDecoder(payload, end)
-                dc_stats = {td: bytearray(_DC_STAT_BINS) for td in dc_stats}
-                ac_stats = {ta: bytearray(_AC_STAT_BINS) for ta in ac_stats}
-                prev_dc = {cid: 0 for cid, *_rest in comps}
-                ctx = {cid: 0 for cid, *_rest in comps}
-            mcu += 1
-            for cid, td, ta in scan:
-                _cid, hf, vf, _tq = by_cid[cid]
-                lo, hi = dc_cond[td]
-                for by in range(vf):
-                    for bx in range(hf):
-                        diff, ctx[cid] = _decode_dc(
-                            dec, dc_stats[td], ctx[cid], lo, hi
-                        )
-                        prev_dc[cid] += diff
-                        zz = _decode_ac(dec, ac_stats[ta], ac_kx[ta])
-                        zz[0] = prev_dc[cid]
-                        grids[cid][my * vf + by, mx * hf + bx] = zz
-
-    if len(comps) == 1:
-        # per-block matrix IDCT, mirroring jpeg_gray_decode's summation
-        # order exactly (the einsum batch can differ by a last ulp
-        # across an rint boundary — r10 parity lesson)
-        cid, _hf, _vf, tq = comps[0]
-        q = quant[tq].astype(np.float64)
-        nby, nbx = grids[cid].shape[:2]
-        out = np.zeros((nby * 8, nbx * 8), dtype=np.uint8)
-        for by in range(nby):
-            for bx in range(nbx):
-                coeffs = np.zeros((8, 8))
-                coeffs[_ZZ_ROWS, _ZZ_COLS] = grids[cid][by, bx]
-                block = _DCT_M.T @ (coeffs * q) @ _DCT_M
-                out[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = np.clip(
-                    np.rint(block + 128.0), 0, 255
-                ).astype(np.uint8)
-        return width, height, out[:height, :width]
-
-    planes: dict[int, np.ndarray] = {}
-    for cid, hf, vf, tq in comps:
-        zz = grids[cid].astype(np.float64)
-        q = quant[tq].astype(np.float64)
-        coeffs = np.zeros(zz.shape[:2] + (8, 8))
-        coeffs[..., _ZZ_ROWS, _ZZ_COLS] = zz
-        blocks = np.einsum("ux,nbuv,vy->nbxy", _DCT_M, coeffs * q, _DCT_M)
-        nby, nbx = blocks.shape[:2]
-        plane = np.clip(
-            np.rint(blocks + 128.0), 0, 255
-        ).transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
-        plane = np.repeat(
-            np.repeat(plane, vmax // vf, axis=0), hmax // hf, axis=1
-        )
-        planes[cid] = plane[:height, :width]
-
-    if len(comps) != 3:
-        raise ValueError(f"{len(comps)}-component arithmetic stream")
-    c0, c1, c2 = (c[0] for c in comps)
-    ids = tuple(c[0] for c in comps)
-    is_rgb = hdr["adobe_transform"] == 0 or ids == (0x52, 0x47, 0x42)
-    if is_rgb:
-        return width, height, np.clip(
-            np.rint(np.stack([planes[c0], planes[c1], planes[c2]], axis=-1)),
-            0, 255,
-        ).astype(np.uint8)
-    return width, height, _ycbcr_to_rgb(planes[c0], planes[c1], planes[c2])
+    hdr = _parse_frame(payload, 0xC9)
+    return _grids_to_pixels(hdr, _arith_grids(hdr))

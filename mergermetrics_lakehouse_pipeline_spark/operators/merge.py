@@ -48,9 +48,11 @@ def _key_condition(target: DataFrame, source: DataFrame, keys: Sequence[str]) ->
 
 def _assert_unique_source(source: DataFrame, keys: Sequence[str]) -> None:
     """Delta-MERGE parity: a source with duplicate merge keys is an error,
-    not a silent nondeterministic pick."""
-    dup = source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-    if dup:
+    not a silent nondeterministic pick. One shuffle by the keys (NULL
+    keys group together, as ``<=>`` matches them) and a probe for any
+    group of two or more: one map-stage job and one result job."""
+    dups = source.groupBy(*keys).count().filter(F.col("count") > 1)
+    if not dups.isEmpty():
         raise ValueError(
             f"merge source has multiple rows per key {list(keys)}; "
             "dedupe the source first (Delta MERGE would raise the same)"

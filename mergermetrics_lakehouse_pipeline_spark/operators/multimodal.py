@@ -6,17 +6,16 @@ columnar/compressed, metadata prunes without touching bytes).
 
 Decode kernels: WAV audio, non-interlaced 8-bit PNG (grayscale, RGB,
 RGBA; all five spec filters), uncompressed 24-bit BMP, GIF, and
-JPEG — grayscale baseline (round 9), 3-component YCbCr color with
-4:4:4/4:2:2/4:2:0 subsampling, AND progressive SOF2 with spectral
-selection + successive approximation (round 10) — decode for REAL via
-the stdlib + numpy (operators/jpeg.py + jpeg_progressive.py: the full
-T.81 marker/Huffman/DCT pipeline, encode AND decode); magic bytes are
-sniffed per payload. Formats still needing codec libraries absent from
-this container (arithmetic-coded/hierarchical JPEG, MP4, compressed
-audio) fall back to a clearly-marked deterministic stub derived from
-the payload digest (or raise NotImplementedError in strict mode), so
-the Spark-side contract — schema, Arrow batch shape, partitioning — is
-identical on every path and tested end-to-end.
+JPEG — baseline, progressive and arithmetic-coded sequential, gray or
+3-component YCbCr with 4:4:4/4:2:2/4:2:0 subsampling — decode for REAL
+via the stdlib + numpy (operators/jpeg.py and its entropy-coder
+siblings: the full T.81 marker/entropy/DCT pipeline, encode AND
+decode); magic bytes are sniffed per payload. Formats still needing
+codec libraries absent from this container (hierarchical JPEG, MP4,
+compressed audio) fall back to a clearly-marked deterministic stub
+derived from the payload digest (or raise NotImplementedError in strict
+mode), so the Spark-side contract — schema, Arrow batch shape,
+partitioning — is identical on every path and tested end-to-end.
 
 The distributed plumbing is production-shaped: ``mapInPandas`` with
 Arrow batches, bounded batch memory via
@@ -275,49 +274,17 @@ def _decode_png(payload: bytes) -> dict:
 
 
 def _decode_jpeg(payload: bytes) -> dict:
-    """REAL image decode for baseline sequential JPEG (operators/
-    jpeg.py: marker parse -> Huffman entropy decode -> dequantize ->
-    IDCT, from the public T.81 spec). Grayscale landed round 9; round
-    10 adds 3-component YCbCr with 4:4:4/4:2:2/4:2:0 subsampling —
-    dispatch reads the SOF component count, the color path upsamples
-    chroma and applies the JFIF BT.601 inverse, and luminance for the
-    feature/phash uses the same (r+g+b)//3 convention as the PNG path.
-    Round 10 also decodes PROGRESSIVE streams (SOF2 — spectral
-    selection + successive approximation; operators/jpeg_progressive.py)
-    and round 11 ARITHMETIC-CODED streams (SOF9 — T.81 Annex-D
-    QM-coder; operators/jpeg_arith.py) for real: the stub now covers
-    only hierarchical JPEG, MP4, and compressed audio."""
-    from .jpeg import (
-        jpeg_color_decode,
-        jpeg_frame_marker,
-        jpeg_gray_decode,
-        jpeg_sof_components,
+    """REAL image decode for baseline, progressive and arithmetic-coded
+    sequential JPEG (operators/jpeg.py and its two entropy-coder
+    siblings, from the public T.81 spec), gray or 3-component colour.
+    Luminance for the feature/phash uses the same (r+g+b)//3 convention
+    as the PNG path."""
+    from .jpeg import jpeg_decode
+
+    width, height, decoded = jpeg_decode(payload)
+    matrix = (
+        decoded if decoded.ndim == 2 else decoded.astype("int64").sum(axis=2) // 3
     )
-
-    frame = jpeg_frame_marker(payload)
-    if frame == 0xC2:
-        from .jpeg_progressive import jpeg_progressive_decode
-
-        width, height, decoded = jpeg_progressive_decode(payload)
-        matrix = (
-            decoded
-            if decoded.ndim == 2
-            else decoded.astype("int64").sum(axis=2) // 3
-        )
-    elif frame == 0xC9:  # arithmetic-coded sequential (round 11)
-        from .jpeg_arith import jpeg_arith_decode
-
-        width, height, decoded = jpeg_arith_decode(payload)
-        matrix = (
-            decoded
-            if decoded.ndim == 2
-            else decoded.astype("int64").sum(axis=2) // 3
-        )
-    elif jpeg_sof_components(payload) == 1:
-        width, height, matrix = jpeg_gray_decode(payload)
-    else:
-        width, height, rgb = jpeg_color_decode(payload)
-        matrix = rgb.astype("int64").sum(axis=2) // 3
     rows = matrix.tolist()
     pixels = (matrix.ravel() / 255.0).tolist()
     return {
@@ -720,12 +687,8 @@ def synthesize_media_from_documents(docs: DataFrame) -> DataFrame:
 def _le_bytes(v: F.Column, n: int) -> F.Column:
     """``v`` as ``n`` little-endian bytes (pure JVM: hex per byte + unhex)."""
     return F.unhex(
-        F.concat_ws(
-            "",
-            *[
-                F.format_string("%02x", F.shiftright(v, 8 * i).bitwiseAND(F.lit(255)))
-                for i in range(n)
-            ],
+        F.format_string(
+            "%02x" * n, *[F.shiftright(v, 8 * i).bitwiseAND(255) for i in range(n)]
         )
     )
 
@@ -736,18 +699,13 @@ def wav_container(data: F.Column) -> F.Column:
     genuinely decodable by any WAV reader, with the input bytes as PCM
     samples. Used to synthesize real audio payloads from testdata text."""
     dl = F.octet_length(data).cast("int")
+    # fmt chunk: size 16, PCM, mono, 8 kHz, 16000 B/s, block align 2,
+    # 16 bits per sample — constant, so packed here as one literal
+    fmt = struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
     header = F.concat(
         F.lit(b"RIFF"),
         _le_bytes(dl + F.lit(36), 4),
-        F.lit(b"WAVEfmt "),
-        _le_bytes(F.lit(16), 4),  # fmt chunk size
-        _le_bytes(F.lit(1), 2),  # PCM
-        _le_bytes(F.lit(1), 2),  # mono
-        _le_bytes(F.lit(8000), 4),  # sample rate
-        _le_bytes(F.lit(16000), 4),  # byte rate
-        _le_bytes(F.lit(2), 2),  # block align
-        _le_bytes(F.lit(16), 2),  # bits per sample
-        F.lit(b"data"),
+        F.lit(b"WAVEfmt " + fmt + b"data"),
         _le_bytes(dl, 4),
     )
     return F.concat(header, data)

@@ -59,7 +59,7 @@ from .delta_log import (
     ConcurrentModificationError,
     DeltaProtocolError,
     DeltaSnapshot,
-    _add_action,
+    _author_commit,
     _allow_reader_features,
     _check_rebase,
     _clamp_commit_ts,
@@ -70,7 +70,6 @@ from .delta_log import (
     _parse_log_file,
     _scan_files,
     _stage_write,
-    _stats_columns,
     _try_write_commit,
     compact_log,
     delete_delta,
@@ -292,7 +291,6 @@ def append_coordinated(
     per attempt. No put-if-absent on the numbered log anywhere."""
     spark = df.sparkSession
     snap = snapshot_coordinated(spark, table_path, coordinator)
-    tid = _table_id(table_path)
     expected = [f.name for f in snap.schema.fields]
     if [c for c in df.columns] != expected:
         raise ValueError(
@@ -315,31 +313,11 @@ def append_coordinated(
             "whose add-action stamping the coordinated path does not "
             "implement yet"
         )
-    rels = _stage_write(df, table_path, snap.partition_columns)
-    now_ms = int(time.time() * 1000)
-    stat_cols = _stats_columns(snap.schema, snap.partition_columns)
-    actions: list[dict[str, Any]] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "WRITE",
-                "operationParameters": {"mode": "Append"},
-                "engineInfo": _ENGINE,
-            }
-        },
-        *[
-            _add_action(
-                table_path, rel, snap.partition_columns, stat_cols, now_ms
-            )
-            for rel in rels
-        ],
-    ]
-    return _commit_coordinated(
-        table_path,
-        actions,
-        _CommitGuard(blind_append=True),
-        snap.version,
-        coordinator=coordinator,
+    return _author_commit(
+        table_path, snap, operation="WRITE", params={"mode": "APPEND"},
+        adds=_stage_write(df, table_path, snap.partition_columns),
+        guard=_CommitGuard(blind_append=True),
+        commit_fn=functools.partial(_commit_coordinated, coordinator=coordinator),
     )
 
 

@@ -39,8 +39,10 @@ SparkSession: batch reads plan the live files of
 ``delta_log.snapshot(None, path)`` (the engine's one log replay),
 streams plan each commit's changes from ``delta_log._classify_commit``
 (the same rule ``stream_commit_batches`` / ``read_cdf`` apply), and
-``DataSource.schema()`` reads the newest metaData and protocol actions
-through ``delta_log._latest_action`` with no session round trip.
+``DataSource.schema()`` takes the schema, partition columns and
+protocol check from that same snapshot, with no session round trip.
+A batch plan therefore replays the log twice: once for the schema and
+once for the files it plans.
 
 Scale: planning is O(files-in-commit) driver metadata; all row work is
 executor-side Arrow decoding. For maximum JVM-native throughput the
@@ -52,7 +54,6 @@ sources make.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Any, Iterator
 
@@ -72,7 +73,6 @@ from pyspark.sql.types import StructType
 
 from .delta_log import (
     DeltaProtocolError,
-    _check_protocol,
     _check_type_changes,
     _classify_commit,
     _latest_action,
@@ -100,23 +100,8 @@ def _table_schema(table_path: str) -> tuple[StructType, list[str]]:
     executors inside the schema itself — _read_partition resolves file
     columns physically (by parquet field id first, then physical name)
     and re-emits them under logical names."""
-    md = _latest_action(table_path, "metaData")
-    if md is None:
-        raise DeltaProtocolError(
-            f"no metaData action found under {table_path}"
-        )
-    conf = dict(md.get("configuration") or {})
-    mode = conf.get("delta.columnMapping.mode", "none")
-    if mode not in ("none", "name", "id"):
-        raise DeltaProtocolError(
-            f"column mapping mode {mode!r} not supported (none/name/id)"
-        )
-    # unsupported reader features raise instead of silently misreading;
-    # after truncate_log the protocol may survive only in the checkpoint
-    protocol = _latest_action(table_path, "protocol")
-    if protocol is not None:
-        _check_protocol(protocol)
-    schema = StructType.fromJson(json.loads(md["schemaString"]))
+    snap = snapshot(None, table_path)  # checks mapping mode and protocol
+    schema = snap.schema
     _check_type_changes(schema)  # gate unsupported foreign widenings
     if _schema_has_variant(schema):
         # this container's pyarrow cannot open parquet footers carrying
@@ -128,7 +113,7 @@ def _table_schema(table_path: str) -> tuple[StructType, list[str]]:
             "datasource (pyarrow lacks the parquet VARIANT logical "
             "type); use the JVM scan (read_delta)"
         )
-    return schema, list(md.get("partitionColumns") or [])
+    return schema, list(snap.partition_columns)
 
 
 # --------------------------------------------------------------------------
@@ -161,12 +146,6 @@ class _DeltaFilePartition(InputPartition):
         #: a file with none fails loudly instead of name-matching
         #: (round-7 review finding #5)
         self.strict_ids = strict_ids
-
-
-def _mapping_mode(table_path: str) -> str:
-    md = _latest_action(table_path, "metaData") or {}
-    conf = dict(md.get("configuration") or {})
-    return conf.get("delta.columnMapping.mode", "none")
 
 
 def _commit_partitions(
@@ -353,16 +332,17 @@ def _filter_bounds(filters: list[Filter]) -> dict[str, list[Any]]:
 
 
 def _snapshot_partitions(
-    table_path: str,
-    bounds: dict[str, list[Any]] | None = None,
-    strict_ids: bool = False,
+    table_path: str, bounds: dict[str, list[Any]] | None = None
 ) -> list[_DeltaFilePartition]:
     """Current live files — the batch-read planner, over the replay
     ``delta_log.snapshot`` does (Spark-free, so it runs in the planning
     Python worker). ``bounds`` (from pushed filters) stats-prunes: a
     file whose footer min/max or partition value provably cannot
     intersect every bound is never planned, the same data-skipping
-    read_delta_pruned applies."""
+    read_delta_pruned applies. Files of an id-mode table must carry
+    parquet field ids."""
+    snap = snapshot(None, table_path)
+    strict_ids = snap.column_mapping_mode == "id"
     return [
         _DeltaFilePartition(
             table_path,
@@ -373,7 +353,7 @@ def _snapshot_partitions(
             a.get("deletionVector"),
             strict_ids=strict_ids,
         )
-        for rel, a in snapshot(None, table_path).files.items()
+        for rel, a in snap.files.items()
         if not bounds
         or all(
             _may_intersect(a, col, lo, hi)
@@ -387,7 +367,6 @@ class DeltaLogBatchReader(DataSourceReader):
         self.table_path = options["path"]
         self.schema = schema
         self._bounds: dict[str, list[Any]] = {}
-        self._strict_ids = _mapping_mode(self.table_path) == "id"
 
     def pushFilters(self, filters):  # noqa: N802 (API name)
         """Record interval bounds for stats pruning, then hand EVERY
@@ -411,9 +390,7 @@ class DeltaLogBatchReader(DataSourceReader):
             for f in self.schema.fields
         }
         bounds = {phys.get(c, c): b for c, b in self._bounds.items()}
-        return _snapshot_partitions(
-            self.table_path, bounds, strict_ids=self._strict_ids
-        )
+        return _snapshot_partitions(self.table_path, bounds)
 
     def read(self, partition: _DeltaFilePartition):
         return _read_partition(partition, self.schema, cdf=False)
@@ -442,7 +419,9 @@ class DeltaLogStreamReader(DataSourceStreamReader):
                 )
             except ValueError:
                 self.from_version = 0  # anchor predates the table
-        self._strict_ids = _mapping_mode(self.table_path) == "id"
+        md = _latest_action(self.table_path, "metaData") or {}
+        conf = md.get("configuration") or {}
+        self._strict_ids = conf.get("delta.columnMapping.mode") == "id"
         #: admission control: at most this many commits per micro-batch
         #: (0 = unbounded). The rate-limiting knob every production
         #: stream needs — a backfill over 10k commits must not become

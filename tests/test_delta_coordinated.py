@@ -793,3 +793,39 @@ def test_coordinated_maintenance_refuses_plain_tables(spark):
         truncate_log_coordinated(root, cat)
     with pytest.raises(DeltaProtocolError, match="not catalog-owned"):
         compact_log_coordinated(root, cat, 0, 1)
+
+
+def test_coordinated_append_commit_matches_plain_append(spark, coord_table):
+    """The coordinated append authors its commit with the same builder
+    as write_delta: its add actions equal a plain append's of the same
+    rows except for paths and times, and its commitInfo is the plain
+    append's."""
+    root, cat = coord_table
+    plain = os.path.join(os.path.dirname(root), "plain")
+    write_delta(_g(spark, 0, 12), plain, mode="overwrite")
+    pv = write_delta(_g(spark, 12, 16), plain, mode="append")
+    cv = append_coordinated(_g(spark, 12, 16), root, cat)
+    backfill(root, cat, up_to=cv)
+
+    def commit(table, v):
+        path = os.path.join(table, "_delta_log", f"{v:020d}.json")
+        actions = [json.loads(line) for line in open(path) if line.strip()]
+        adds = sorted(
+            (
+                {k: x for k, x in a["add"].items() if k not in ("path", "modificationTime")}
+                for a in actions
+                if "add" in a
+            ),
+            key=lambda a: a["stats"],
+        )
+        info = next(a["commitInfo"] for a in actions if "commitInfo" in a)
+        info = {k: x for k, x in info.items() if k not in ("timestamp", "inCommitTimestamp")}
+        return adds, info
+
+    plain_adds, plain_info = commit(plain, pv)
+    coord_adds, coord_info = commit(root, cv)
+    assert coord_adds and coord_adds == plain_adds
+    assert coord_info == plain_info == {
+        "operation": "WRITE",
+        "operationParameters": {"mode": "APPEND"},
+    }

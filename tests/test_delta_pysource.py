@@ -536,3 +536,30 @@ def test_foreign_replace_commit_classified_once(spark, tbl, tmp_path):
     q.awaitTermination(120)
     assert q.exception() is None
     assert _changes(spark.table("dpys_replace")) == expect
+
+
+def test_batch_plan_reads_the_log_twice(spark, tbl, monkeypatch):
+    """A batch plan of a 5-commit table (schema, then the reader's
+    partitions) replays the log once for the schema and once for the
+    files: two directory listings, ten commit parses."""
+    from mergermetrics_lakehouse_pipeline_spark.sources import delta_log
+    from mergermetrics_lakehouse_pipeline_spark.sources.delta_pysource import (
+        DeltaLogDataSource,
+    )
+
+    write_delta(_kv(spark, 10), tbl, mode="overwrite")
+    for i in range(4):
+        write_delta(_kv(spark, 10).filter(f"k = {i}"), tbl, mode="append")
+    calls = {"_scan_log": 0, "_parse_log_file": 0}
+    for name in calls:
+        real = getattr(delta_log, name)
+
+        def counting(*args, _real=real, _name=name, **kwargs):
+            calls[_name] += 1
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(delta_log, name, counting)
+    source = DeltaLogDataSource({"path": tbl})
+    parts = source.reader(source.schema()).partitions()
+    assert len(parts) >= 5  # one file per append at least
+    assert calls == {"_scan_log": 2, "_parse_log_file": 10}

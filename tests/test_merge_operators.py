@@ -160,3 +160,45 @@ def test_table_insert_only(spark):
             key=repr,
         )
     spark.sql("DROP TABLE mt_insert_only_rerun")
+
+
+def _jobs_of(spark, fn):
+    """(result or raised error, ids of the Spark jobs ``fn`` launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"merge-guard-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "merge guard test")
+    try:
+        out = fn()
+    except ValueError as exc:
+        out = exc
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_duplicate_guard_runs_two_jobs(spark):
+    """Plain and NULL-key duplicates raise (NULL keys group together, as
+    MERGE matches them with <=>), a unique source passes, and each check
+    of a source without its own shuffle runs at most two Spark jobs."""
+    from mergermetrics_lakehouse_pipeline_spark.operators.merge import (
+        _assert_unique_source,
+    )
+
+    schema = "k bigint, j string, v string"
+    cases = {
+        "plain": ([(1, "a", "x"), (1, "a", "y"), (2, "a", "z")], True),
+        "null key": ([(None, None, "x"), (None, None, "y")], True),
+        "null in one key": ([(1, None, "x"), (1, None, "y")], True),
+        "unique": ([(1, "a", "x"), (1, "b", "y"), (None, "a", "z")], False),
+    }
+    for name, (rows, dup) in cases.items():
+        source = spark.createDataFrame(rows, schema)
+        out, jobs = _jobs_of(
+            spark, lambda s=source: _assert_unique_source(s, ["k", "j"])
+        )
+        assert isinstance(out, ValueError) == dup, name
+        assert 1 <= len(jobs) <= 2, (name, jobs)

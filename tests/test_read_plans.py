@@ -208,3 +208,46 @@ def test_mapped_and_evolved_tables_keep_logical_shape(spark, tmp_path):
         (0, 0, 0, None, None), (1, 1, 10, None, None), (2, 0, 20, None, None),
         (3, 1, 30, None, None), (4, 0, 40, "new", None), (5, 1, 50, "new", None),
     ]
+
+
+def test_wav_container_header_bytes_and_round_trips(spark):
+    """The RIFF header's constant fields are one literal, so building
+    the expression costs a few hundred py4j round trips, not one Column
+    per byte, and the bytes are those of ``struct.pack``."""
+    import struct
+    import threading
+
+    from mergermetrics_lakehouse_pipeline_spark.operators.multimodal import (
+        wav_container,
+    )
+
+    # count only this thread's calls, and keep the cheapest of three
+    # builds: calls that other threads or a garbage collection make
+    # meanwhile are not the build's
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, n = client.send_command, threading.get_ident(), [0]
+
+    def counting_send(*args, **kwargs):
+        n[0] += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    counts = []
+    client.send_command = counting_send
+    try:
+        for _ in range(3):
+            n[0] = 0
+            expr = wav_container(F.col("content"))
+            counts.append(n[0])
+    finally:
+        del client.send_command  # back to the class method
+    assert min(counts) <= 300
+    payloads = [b"", b"a", b"\x00\xff" * 3, bytes(range(256)) * 5]
+    df = spark.createDataFrame([(p,) for p in payloads], "content binary")
+    got = [bytes(r[0]) for r in df.select(expr).collect()]
+    want = [
+        b"RIFF" + struct.pack("<I", len(p) + 36) + b"WAVEfmt "
+        + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
+        + b"data" + struct.pack("<I", len(p)) + p
+        for p in payloads
+    ]
+    assert got == want
