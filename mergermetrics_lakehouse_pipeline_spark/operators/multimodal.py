@@ -567,8 +567,7 @@ def _decode_payload(payload: bytes, *, strict: bool = False) -> dict:
     if strict:
         raise NotImplementedError(
             "payload format needs codec libraries not present in this "
-            "container (arithmetic/hierarchical JPEG, MP4, compressed "
-            "audio); run "
+            "container (hierarchical JPEG, MP4, compressed audio); run "
             "with strict=False for the stubbed deterministic kernel"
         )
     return {

@@ -36,6 +36,18 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def _dot_sql(a: str, b: str) -> str:
+    """``dot`` as one SQL expression over two named array columns: the
+    same plan, built in one py4j round trip instead of one per Column
+    and lambda."""
+    a, b = (f"CAST({c} AS array<double>)" for c in (a, b))
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (x, y) -> x + y)"
+
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt({_dot_sql(a, a)})"
+
+
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
@@ -53,27 +65,21 @@ def cosine_topk(
     Output: (query_id, neighbor_id, cosine_sim, rank) — excludes the
     self-pair; deterministic tie-break on neighbor id.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_n"),
+    idc, vec = (f"`{c.replace('`', '``')}`" for c in (id_col, vec_col))
+    q = queries.selectExpr(
+        f"{idc} AS query_id", f"{vec} AS q_vec", f"{_norm_sql(vec)} AS q_n"
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("c_n"),
+    c = corpus.selectExpr(
+        f"{idc} AS neighbor_id", f"{vec} AS c_vec", f"{_norm_sql(vec)} AS c_n"
     )
     # norms are computed once per row on each join side (the join is a
     # plan barrier, so Catalyst can't re-inline them per pair); per-pair
     # cost is a single dot product. dot/(q_n*c_n) is bit-identical to
     # cosine(q_vec, c_vec).
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_n") * F.col("c_n"))).alias("sim"),
-        )
+    scored = c.join(F.broadcast(q), F.expr("query_id != neighbor_id")).selectExpr(
+        "query_id",
+        "neighbor_id",
+        f"{_dot_sql('q_vec', 'c_vec')} / (q_n * c_n) AS sim",
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id")

@@ -4106,6 +4106,26 @@ def _cdf_enabled(snap: DeltaSnapshot) -> bool:
     return snap.configuration.get(_CDF_PROP, "").lower() == "true"
 
 
+#: lets AQE coalesce the last shuffle of a plan that is cached
+_CACHED_COALESCE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+def _cache_coalesced(df: DataFrame) -> DataFrame:
+    """``df.cache()`` at the width AQE coalesces its last shuffle to.
+    Under the session default a cached plan keeps
+    spark.sql.shuffle.partitions output partitions, so every scan of a
+    few hundred cached rows runs that many tasks. The cache entry takes
+    the conf when ``.cache()`` builds it, so only that call sees the
+    flag; the previous value is restored."""
+    conf = df.sparkSession.conf
+    prev = conf.get(_CACHED_COALESCE)
+    conf.set(_CACHED_COALESCE, "true")
+    try:
+        return df.cache()
+    finally:
+        conf.set(_CACHED_COALESCE, prev)
+
+
 #: input bytes below which a DML write task is not worth its own file
 _WRITE_TASK_BYTES = 8 * 1024 * 1024
 
@@ -4449,16 +4469,21 @@ def _touched_files_by_keys(
     table_path: str,
     snap: DeltaSnapshot,
     keys_df: DataFrame,
-    key: str | list[str],
+    keys: list[str],
+    lo: Any,
+    hi: Any,
 ) -> list[str]:
     """Relative paths of files containing >= 1 row whose key (single or
     COMPOSITE) appears in ``keys_df`` — the MERGE variant of
     touched-file discovery: one scan projecting (keys, file path), one
-    semi-join against the source keys, O(matched files) collected."""
-    keys = [key] if isinstance(key, str) else list(key)
-    if not snap.files:
+    semi-join against the source keys, O(matched files) collected.
+    Only files whose lead-key stats intersect [``lo``, ``hi``], the
+    source's lead-key bounds, are scanned: every source key's lead
+    column lies in that interval, and a NULL key matches nothing."""
+    rels, _ = prune_files_by_stats(snap, keys[0], lo, hi)
+    if not rels:
         return []
-    paths = [os.path.join(table_path, p) for p in snap.files]
+    paths = [os.path.join(table_path, p) for p in rels]
     raw = _raw_reader(spark, table_path, snap).parquet(*paths).select(
         *[F.col(snap.physical(k)).alias(k) for k in keys],
         _strip_scheme(F.col("_metadata.file_path")).alias("__fp"),
@@ -4470,8 +4495,7 @@ def _touched_files_by_keys(
         .collect()
     )
     abs_to_rel = {
-        os.path.abspath(os.path.join(table_path, rel)): rel
-        for rel in snap.files
+        os.path.abspath(os.path.join(table_path, rel)): rel for rel in rels
     }
     return sorted(
         abs_to_rel[r["__fp"]] for r in hits if r["__fp"] in abs_to_rel
@@ -4806,17 +4830,26 @@ def merge_delta(
 
     Returns (new_version, n_files_rewritten).
 
-    Scale: two-clause discovery is one projected scan + one semi-join,
-    rewrite bounded by files that actually contain matches (an interval
-    prune would degrade to a full rewrite whenever insert keys widen
-    the source range), written as at most ceil((rewritten + source
-    bytes) / 8 MiB) files; the by-source delete clause is inherently a
-    full-table rewrite and holds a whole-table conflict guard. The
-    insert-only append rewrites nothing: one anti-join against a key
-    scan of the files whose lead-key stats intersect the source's
-    [lo, hi], written as at most ceil(source bytes / 8 MiB) files. Both conflict guards without
-    the by-source clause keep the source's key interval, so a
-    concurrent append whose stats prove it disjoint rebases cleanly."""
+    Scale: two-clause discovery is one projected scan of the files
+    whose lead-key stats intersect the source's [lo, hi] + one
+    semi-join, so the rewrite is bounded by files that actually contain
+    matches (the interval prune alone would degrade to a full rewrite
+    whenever insert keys widen the source range); the by-source delete
+    clause is inherently a full-table rewrite and holds a whole-table
+    conflict guard. The rewrite and the change feed come from ONE full
+    outer join of the affected files and the source: the survivors are
+    one projection of it, the change rows filtered projections of the
+    same frame, which is cached when the table has the change data feed
+    so the join runs once. Survivors are written as at most
+    ceil((rewritten + source bytes) / 8 MiB) files. The source and the
+    join are cached at the width AQE coalesces their last shuffle to,
+    so each later scan of a few hundred rows runs a task or two, not
+    spark.sql.shuffle.partitions. The insert-only append rewrites
+    nothing: one anti-join against a key scan of the files whose
+    lead-key stats intersect the source's [lo, hi], written as at most
+    ceil(source bytes / 8 MiB) files. Both conflict guards without the
+    by-source clause keep the source's key interval, so a concurrent
+    append whose stats prove it disjoint rebases cleanly."""
     if when_matched not in ("update", "ignore"):
         raise ValueError("when_matched must be 'update' or 'ignore'")
     if when_not_matched_by_source not in (None, "delete"):
@@ -4852,7 +4885,8 @@ def merge_delta(
             f"{id_always}; declare them BY DEFAULT (allow_explicit) to "
             "merge explicit ids"
         )
-    src = source.cache()
+    src = _cache_coalesced(source)
+    cached = [src]
     try:
         # ONE source pass yields the duplicate-key guard AND the lead-key
         # bounds (VERDICT r6 next-step #3: the dup-check and min/max
@@ -4862,11 +4896,11 @@ def merge_delta(
         # aggregate (partial map-side distinct) instead of the previous
         # groupBy-then-agg's two chained shuffles; one fewer
         # stage/job per MERGE, same rejection condition.
-        stats = src.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_distinct(F.struct(*keys)).alias("n_keys"),
-            F.min(keys[0]).alias("lo"),
-            F.max(keys[0]).alias("hi"),
+        stats = src.selectExpr(
+            "count(1) AS n_rows",
+            f"count(DISTINCT struct({', '.join(map(_quote, keys))})) AS n_keys",
+            f"min({_quote(keys[0])}) AS lo",
+            f"max({_quote(keys[0])}) AS hi",
         ).first()
         if stats["n_rows"] > stats["n_keys"]:
             raise DeltaProtocolError(
@@ -4888,114 +4922,125 @@ def merge_delta(
                 metadata=id_meta, commit_fn=commit_fn,
             )
             return v, 0
-        # no .distinct(): the guard above just PROVED the source keys
-        # unique (n_rows == n_keys or we raised), so the dedup was a
-        # no-op costing a full exchange before every semi/anti-join
-        # consumer below (guide §2.4 "a distinct on data that is
-        # already unique")
-        src_keys = src.select(*keys)
-        if when_not_matched_by_source is None:
+        # no .distinct() on the source keys: the guard above just PROVED
+        # them unique (n_rows == n_keys or we raised)
+        by_source = when_not_matched_by_source is not None
+        if by_source:
+            # the by-source clause can delete rows from ANY file
+            candidates = list(snap.files)
+        else:
             # touched-file discovery, Delta's own MERGE algorithm: semi-join
             # the table scan against the source keys and collect the
             # distinct file paths — EXACT (a stats interval over a mixed
             # update+insert source would span the insert keys and degrade
             # to a full rewrite)
             candidates = _touched_files_by_keys(
-                spark, table_path, snap, src_keys, keys
+                spark, table_path, snap, src.select(*keys), keys, lo, hi
             )
-        else:
-            # the by-source clause can delete rows from ANY file
-            candidates = list(snap.files)
-
-        affected = _scan_files(spark, table_path, snap, candidates)
-        tgt_keys = affected.select(*keys).distinct()
-        inserts = src.join(tgt_keys, keys, "left_anti")
-        replaced, preimage, postimage, matched_kept = _merge_matched(
-            affected, src, src_keys, keys, update=when_matched == "update"
+        joined = _merge_join(
+            _scan_files(spark, table_path, snap, candidates), src, keys
         )
-        deleted = affected.limit(0)
-        if when_not_matched_by_source == "delete":
-            deleted = affected.join(src_keys, keys, "left_anti")
-            replaced = matched_kept  # unmatched-by-source rows drop out
-        new_content = replaced.unionByName(inserts)
-
-        by_source = when_not_matched_by_source is not None
+        if _cdf_enabled(snap):
+            # the rewrite and the change feed both read the join
+            joined = _cache_coalesced(joined)
+            cached.append(joined)
+        survivors = joined.where("__s IS NOT NULL") if by_source else joined
+        survivors = survivors.selectExpr(*_merge_image(tcols, keys, when_matched))
         guard = _CommitGuard(
             removed=set(candidates),
             read_files=set(candidates),
             read_whole_table=by_source,
             predicate=None if by_source else (snap.physical(keys[0]), lo, hi),
         )
-
-        def _changes(_df: DataFrame) -> DataFrame:
-            pre = preimage.withColumn("_change_type", F.lit("update_preimage"))
-            post = postimage.withColumn("_change_type", F.lit("update_postimage"))
-            ins = inserts.withColumn("_change_type", F.lit("insert"))
-            out = pre.unionByName(post).unionByName(ins)
-            return out.unionByName(
-                deleted.withColumn("_change_type", F.lit("delete"))
-            )
-
         nbytes = _files_bytes(snap, candidates) + src_bytes
         v = _dml_commit(
             spark, table_path, snap, candidates,
-            survivors_of=lambda _df: _sized(new_content, nbytes),
-            changes_of=_changes,
+            survivors_of=lambda _df: _sized(survivors, nbytes),
+            changes_of=lambda _df: _merge_changes(
+                joined, tcols, keys,
+                update=when_matched == "update", by_source=by_source,
+            ),
             op="MERGE", pred_desc=on_desc, guard=guard,
             change_bytes=src_bytes, metadata=id_meta,
             commit_fn=commit_fn,
         )
     finally:
-        # release the cached source on EVERY path — including the
+        # release the cached frames on EVERY path — including the
         # designed ConcurrentModificationError retry path (round-7
         # review finding #7: each conflict leaked a cached copy)
-        src.unpersist()
+        for df in cached:
+            df.unpersist()
     return v, len(candidates)
 
 
-def _merge_matched(
-    affected: DataFrame,
-    src: DataFrame,
-    src_keys: DataFrame,
+def _merge_join(
+    affected: DataFrame, src: DataFrame, keys: list[str]
+) -> DataFrame:
+    """The affected files' rows (marked ``__t``) FULL OUTER JOIN the
+    source (marked ``__s``, value columns prefixed ``__s_``) on the
+    keys: an equality join, so a NULL key matches nothing and a
+    duplicate target key keeps its multiplicity. Every survivor and
+    every change row of a MERGE is a projection of this one frame."""
+    vals = [c for c in src.columns if c not in keys]
+    return affected.selectExpr("*", "true AS __t").join(
+        src.selectExpr(
+            *[_quote(k) for k in keys],
+            "true AS __s",
+            *[f"{_quote(c)} AS {_quote('__s_' + c)}" for c in vals],
+        ),
+        keys,
+        "full_outer",
+    )
+
+
+def _merge_image(tcols: list[str], keys: list[str], side: str) -> list[str]:
+    """SQL projections of ``_merge_join``'s rows onto the table columns:
+    ``target`` / ``source`` take one side's values; the surviving row of
+    a WHEN MATCHED ``update`` takes the source's where the source has
+    the row, that of ``ignore`` the target's where the target has it.
+    The key columns of the USING join are already coalesced."""
+    pick = {
+        "target": "{t}",
+        "source": "{s}",
+        "update": "IF(__s IS NULL, {t}, {s})",
+        "ignore": "IF(__t IS NULL, {s}, {t})",
+    }[side]
+    return [
+        _quote(c) if c in keys
+        else pick.format(t=_quote(c), s=_quote("__s_" + c)) + f" AS {_quote(c)}"
+        for c in tcols
+    ]
+
+
+def _merge_changes(
+    joined: DataFrame,
+    tcols: list[str],
     keys: list[str],
     *,
     update: bool,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """The WHEN MATCHED clause over the affected files: (their rows after
-    the clause, update preimages, update postimages, matched rows as
-    they survive). ``src`` is projected to the table columns."""
-    if not update:  # ignore: matched rows keep their values
-        return (
-            affected, affected.limit(0), src.limit(0),
-            affected.join(src_keys, keys, "left_semi"),
-        )
-    # per-TARGET-row update via left join: a duplicate-key target keeps
-    # its multiplicity — EVERY matched row takes the source values,
-    # exactly as Delta's WHEN MATCHED UPDATE does (an anti-join +
-    # source-union would silently collapse duplicates)
-    tcols = src.columns
-    val_cols = [c for c in tcols if c not in keys]
-    srcm = src.select(
-        *keys,
-        F.lit(True).alias("__matched"),
-        *[F.col(c).alias(f"__src_{c}") for c in val_cols],
-    )
-    joined = affected.join(srcm, keys, "left")  # AQE picks the strategy
-    replaced = joined.select(
-        *[
-            F.when(F.col("__matched").isNotNull(), F.col(f"__src_{c}"))
-            .otherwise(F.col(c))
-            .alias(c)
-            if c not in keys
-            else F.col(c)
-            for c in tcols
+    by_source: bool,
+) -> DataFrame:
+    """The MERGE's change rows as filtered projections of
+    ``_merge_join``'s frame: update pre- and postimages where both
+    sides have the row (WHEN MATCHED UPDATE), an insert where only the
+    source has it, a delete where only the target has it (the by-source
+    delete clause)."""
+    both = "__t IS NOT NULL AND __s IS NOT NULL"
+    parts = [("__t IS NULL", "source", "insert")]
+    if update:
+        parts += [
+            (both, "target", "update_preimage"),
+            (both, "source", "update_postimage"),
         ]
-    )
-    preimage = affected.join(src_keys, keys, "left_semi")
-    postimage = joined.filter(F.col("__matched").isNotNull()).select(
-        *[F.col(f"__src_{c}").alias(c) if c not in keys else F.col(c) for c in tcols]
-    )
-    return replaced, preimage, postimage, postimage
+    if by_source:
+        parts.append(("__s IS NULL", "target", "delete"))
+    frames = [
+        joined.where(cond).selectExpr(
+            *_merge_image(tcols, keys, side), f"'{kind}' AS _change_type"
+        )
+        for cond, side, kind in parts
+    ]
+    return functools.reduce(DataFrame.union, frames)
 
 
 def _merge_identity_hwm(

@@ -434,3 +434,22 @@ def test_decode_dc_magnitude_overflow_raises_valueerror():
     with pytest.raises(ValueError, match="overflow"):
         _decode_dc(dec, bytearray(_DC_STAT_BINS), 0, DC_L_DEFAULT,
                    DC_U_DEFAULT)
+
+
+def test_strict_decode_takes_arithmetic_jpeg_and_names_only_missing_codecs():
+    """Strict mode decodes an arithmetic-coded JPEG for real; a payload
+    that does need a codec library is refused with a message that lists
+    only formats the engine cannot decode."""
+    from mergermetrics_lakehouse_pipeline_spark.operators.multimodal import (
+        _decode_payload,
+    )
+
+    img = np.random.default_rng(11).integers(0, 256, (16, 24), dtype=np.uint8)
+    out = _decode_payload(jpeg_gray_encode_arith(img), strict=True)
+    assert (out["dec_width"], out["dec_height"]) == (24, 16)
+    assert out["decoder"] != "stub"
+    mp4 = b"\x00\x00\x00\x18ftypmp42" + bytes(16)
+    with pytest.raises(NotImplementedError) as err:
+        _decode_payload(mp4, strict=True)
+    assert "MP4" in str(err.value)
+    assert "arithmetic" not in str(err.value)

@@ -7,8 +7,10 @@ width of the table; the results keep their logical shape."""
 from __future__ import annotations
 
 import contextlib
+import math
 import os
 import shutil
+import threading
 import uuid
 
 import pyarrow as pa
@@ -48,14 +50,15 @@ def _jobs(spark):
 
 @contextlib.contextmanager
 def _round_trips(spark):
-    """Yields a one-element list that counts every call through the py4j
-    gateway client inside the block."""
+    """Yields a one-element list that counts the calling thread's calls
+    through the py4j gateway client inside the block; calls that other
+    threads make meanwhile are not the block's."""
     client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
+    send, me = client.send_command, threading.get_ident()
     n = [0]
 
     def counting_send(*args, **kwargs):
-        n[0] += 1
+        n[0] += threading.get_ident() == me
         return send(*args, **kwargs)
 
     client.send_command = counting_send
@@ -210,37 +213,29 @@ def test_mapped_and_evolved_tables_keep_logical_shape(spark, tmp_path):
     ]
 
 
+def _cheapest_build(spark, build):
+    """(fewest round trips over three calls of ``build``, its result):
+    a garbage collection during one build is not the build's cost."""
+    counts = []
+    for _ in range(3):
+        with _round_trips(spark) as n:
+            out = build()
+        counts.append(n[0])
+    return min(counts), out
+
+
 def test_wav_container_header_bytes_and_round_trips(spark):
     """The RIFF header's constant fields are one literal, so building
     the expression costs a few hundred py4j round trips, not one Column
     per byte, and the bytes are those of ``struct.pack``."""
     import struct
-    import threading
 
     from mergermetrics_lakehouse_pipeline_spark.operators.multimodal import (
         wav_container,
     )
 
-    # count only this thread's calls, and keep the cheapest of three
-    # builds: calls that other threads or a garbage collection make
-    # meanwhile are not the build's
-    client = spark.sparkContext._gateway._gateway_client
-    send, me, n = client.send_command, threading.get_ident(), [0]
-
-    def counting_send(*args, **kwargs):
-        n[0] += threading.get_ident() == me
-        return send(*args, **kwargs)
-
-    counts = []
-    client.send_command = counting_send
-    try:
-        for _ in range(3):
-            n[0] = 0
-            expr = wav_container(F.col("content"))
-            counts.append(n[0])
-    finally:
-        del client.send_command  # back to the class method
-    assert min(counts) <= 300
+    n, expr = _cheapest_build(spark, lambda: wav_container(F.col("content")))
+    assert n <= 300
     payloads = [b"", b"a", b"\x00\xff" * 3, bytes(range(256)) * 5]
     df = spark.createDataFrame([(p,) for p in payloads], "content binary")
     got = [bytes(r[0]) for r in df.select(expr).collect()]
@@ -251,3 +246,32 @@ def test_wav_container_header_bytes_and_round_trips(spark):
         for p in payloads
     ]
     assert got == want
+
+
+def test_cosine_topk_round_trips(spark):
+    """``cosine_topk`` builds its norms and dot product from one SQL
+    string per expression, not from Columns and lambdas built through
+    py4j one call at a time."""
+    from mergermetrics_lakehouse_pipeline_spark.operators.similarity import (
+        cosine_topk,
+    )
+
+    rows = [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(12)]
+    vecs = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    queries = vecs.filter("vec_id < 3")
+    n, top = _cheapest_build(spark, lambda: cosine_topk(vecs, queries, k=2))
+    assert n <= 520
+
+    def dot(a, b):
+        return sum(x * y for x, y in zip(a, b))
+
+    def cos(a, b):
+        return dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+
+    want = []
+    for q, qv in rows[:3]:
+        sims = sorted((-cos(qv, v), i) for i, v in rows if i != q)
+        want += [(q, i, round(-s, 6), r) for r, (s, i) in enumerate(sims[:2], 1)]
+    got = [tuple(r) for r in top.orderBy("query_id", "rank").collect()]
+    assert [g[:2] + g[3:] for g in got] == [w[:2] + w[3:] for w in want]
+    assert [g[2] for g in got] == pytest.approx([w[2] for w in want], abs=1e-6)
